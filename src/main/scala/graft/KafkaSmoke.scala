@@ -20,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   * exits 2 with the precise missing-artifact message instead of a raw
   * stack trace, so the failure mode is a clean preflight diagnostic
   * rather than an unexercised path discovered in production.
+  *
+  * Unlike every other main it keeps its own session builder rather
+  * than [[Session.local]]: under `spark-submit` the master comes from
+  * `MASTER` (a real cluster), and local cores only as the fallback.
   */
 object KafkaSmoke {
   def main(args: Array[String]): Unit = {

@@ -87,32 +87,18 @@ object Pipeline {
     *  4. temperature source rebalancing (sqrt-quota, q102) — LAST, so
     *     quotas reflect the cleaned per-source populations.
     *
-    * Output keeps (doc_id, text, lang, source, quality, n_tokens) and
-    * carries a "graft.curate_full" observe metric (rows and tokens
-    * kept) for per-run telemetry. Shuffle inventory: fingerprint agg,
-    * percentile agg (tiny), LSH band agg + verification joins,
-    * component rounds over the (small) pair set, per-source window —
-    * every key uniform or per-source, nothing corpus-quadratic. */
+    * Output keeps (doc_id, text, lang, source, quality, n_tokens);
+    * q112 observes its "graft.curate_full" metric above its final
+    * sort. Shuffle inventory: fingerprint agg, percentile agg (tiny),
+    * LSH band agg + verification joins, component rounds over the
+    * (small) pair set, per-source window — every key uniform or
+    * per-source, nothing corpus-quadratic. */
   def curateFull(docs: DataFrame, minQuality: Double = 0.3,
-      minJaccard: Double = 0.8, quotaScale: Double = 4.0,
-      stageSeconds: Option[scala.collection.mutable.Map[String, Double]] =
-        None): DataFrame = {
+      minJaccard: Double = 0.8, quotaScale: Double = 4.0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // stage boundaries are the eager materializations the chain already
-    // has (each feeds 2+ consumers) — `stageSeconds` records the wall
-    // time to reach each one, so a probe can attribute cost per stage
-    // without re-running prefix chains; the returned frame's own action
-    // then measures only the final (lazy) rebalance pass
-    var t0 = System.nanoTime()
-    def mark(stage: String): Unit = stageSeconds.foreach { m =>
-      val t1 = System.nanoTime()
-      m.update(stage, (t1 - t0) / 1e9)
-      t0 = t1
-    }
     val counted = curate(docs, minQuality)
       .withColumn("n_tokens", tokenCountOf(tokens(col("text"))))
       .localCheckpoint() // percentile pass + filter both read it
-    mark("1_exact_dedup_quality")
     // one percentile buffer for both trim bounds (array form — see
     // q68's note; bit-identical interpolation per quantile), collected
     // to the driver: the trim then becomes a LITERAL filter over the
@@ -131,12 +117,10 @@ object Pipeline {
       else lit(statsRow.getDouble(i))
     val trimmed = counted
       .filter(col("n_tokens") >= bound(0) && col("n_tokens") <= bound(1))
-    mark("2_outlier_trim")
     val (pairs, truncation) = graft.dedup.NearDup
       .verifiedPairsWithTruncation(trimmed, minJaccard)
     graft.dedup.NearDup.warnIfTruncated("curateFull", truncation)
     val comps = graft.dedup.NearDup.components(pairs)
-    mark("3_near_dup_components")
     // two consumers (the quota aggregation and the final window join):
     // materialize once rather than re-running the anti-join's probe
     // scan per consumer — the drop side is small (dup survivors), so
@@ -145,7 +129,6 @@ object Pipeline {
       .select(col("doc_id"))
     val deduped = trimmed.join(drop, Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    mark("4_dedup_apply")
     val quota = deduped.groupBy(col("source"))
       .agg(count(lit(1)).as("n"))
       .select(col("source"), least(col("n"),
@@ -158,9 +141,6 @@ object Pipeline {
       .join(broadcast(quota), "source")
       .filter(col("rk") <= col("quota"))
       .drop("rk", "quota")
-      .observe("graft.curate_full",
-        count(lit(1)).as("rows_kept"),
-        sum(col("n_tokens")).as("tokens_kept"))
   }
 
   /** One step of INCREMENTAL curation — the continuous-ingest form of
@@ -247,15 +227,7 @@ object Pipeline {
       else "/root/testdata/sf0.001/documents.parquet"
     val outDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-pipeline").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
     val (nc, ni) = run(spark, docsPath, s"$outDir/corpus", s"$outDir/index")
     println(s"""{"corpus_rows":$nc,"index_rows":$ni,"out":"$outDir"}""")
     spark.stop()

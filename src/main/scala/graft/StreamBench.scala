@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.Streams
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput probe: drain a file-sourced CVE JSON stream
@@ -64,14 +63,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "200000").toLong
     val files = 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-streambench")
       .toString

@@ -48,8 +48,8 @@ object Tables {
       // for the life of the JVM, unlike an identity hash, which can be
       // reused after GC and hand a fresh session a stale decision —
       // so a new session (fresh file listing) never inherits one;
-      // within ONE session a same-path parquet rewrite (ScaleProbe
-      // build->query) must call [[invalidateSpreadCache]] — Spark's own
+      // within ONE session a same-path parquet rewrite (`Dev replicate`,
+      // then a query pass) must call [[invalidateSpreadCache]] — Spark's own
       // FileIndex cache has the same same-session staleness, so the
       // writer already knows to refresh. Bounded: cleared wholesale
       // past 4096 entries (each is a few bytes; the bound only guards

@@ -506,6 +506,13 @@ object CurationQueries {
         .select(col("doc_id"), col("lang"), col("source"),
           round(col("quality"), 6).as("quality"), col("n_tokens"))
         .orderBy("doc_id")
+        // per-run telemetry (rows and tokens kept) for any
+        // QueryExecutionListener — observed ABOVE the sort: the range
+        // exchange samples its input in a separate pass over the same
+        // subtree, so a metric observed below it counts every row twice
+        .observe("graft.curate_full",
+          count(lit(1)).as("rows_kept"),
+          sum(col("n_tokens")).as("tokens_kept"))
     },
 
     // ---- Gopher-style repetition gate (Rae et al. 2021 §A1.1): flag

@@ -394,7 +394,7 @@ object VectorQueries {
     //      (exact side brute-forced in-plan), and the DuckDB oracle
     //      independently recomputes the exact top-10 and overlaps it
     //      with the PINNED retrieved ids of the deterministic index at
-    //      sf0.01 (regenerate: `sbt "runMain graft.AnnPins"`). A
+    //      sf0.01 (regenerate: `graft.Dev pins`). A
     //      recall regression in the PQ path changes the counts and
     //      reddens the row; PQSpec keeps the quantitative floors
     //      (ADC 0.34 / re-ranked 0.88 at this config) and the
@@ -426,7 +426,7 @@ object VectorQueries {
     //      artifact, not only to IvfPqSpec. Hash-matched like q100: the
     //      emitted rows are per-query overlap-with-exact-top-10 counts,
     //      the oracle recomputes the exact side and overlaps the pinned
-    //      sf0.01 index output (`graft.AnnPins`). IvfPqSpec keeps the
+    //      sf0.01 index output (`graft.Dev pins`). IvfPqSpec keeps the
     //      recall floors, the codes-only ReadSchema, brute-force
     //      convergence at wide knobs, and bit-identical rebuilds.
     //      Deterministic: stride seeds + decimal-exact means, and the
@@ -458,7 +458,7 @@ object VectorQueries {
     //      mis-appended index would immediately lose the rank-1
     //      self-hits. Hash-matched like q110 — per-query
     //      overlap-with-exact-top-10 over the whole corpus, pins from
-    //      the deterministic build+append (`graft.AnnPins`).
+    //      the deterministic build+append (`graft.Dev pins`).
     //      IvfPqSpec pins the equivalence probe(appended) ≡
     //      probe(rebuild under the same frozen quantizers) and the
     //      ensure-marker idempotence. ----
@@ -477,7 +477,7 @@ object VectorQueries {
     //      measured ~0.93 at avg 5.8/8 buckets probed vs 0.45-0.65 at
     //      fixed nProbe=2). Hash-matched like q110: per-query
     //      overlap-with-exact-top-10 counts, pins from the
-    //      deterministic build (`graft.AnnPins`). ----
+    //      deterministic build (`graft.Dev pins`). ----
     GraftQuery("q170_ann_serving", annRecallSql(PINS_Q170)) { (s, d) =>
       val corpus = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"))
@@ -869,7 +869,7 @@ object VectorQueries {
     * sf0.01. The pins are index OUTPUT, not oracle logic —
     * bit-identical rebuilds are spec-pinned, so a pin mismatch means
     * the index or probe changed. Regenerate with
-    * `sbt "runMain graft.AnnPins"`. */
+    * `sbt "runMain graft.Dev pins <sf0.01 dir>"`. */
   private def annRecallSql(pins: String,
       corpusWhere: String = ""): String =
     s"""WITH q AS (SELECT vec_id AS query_id,
@@ -895,7 +895,7 @@ object VectorQueries {
        |ORDER BY query_id""".stripMargin
 
   /** sf0.01 retrieved ids of the two deterministic ANN indexes
-    * (`graft.AnnPins` regenerates both lists). */
+    * (`graft.Dev pins` regenerates both lists). */
   private def PINS_Q100: String =
     "(0,0),(0,190),(0,323),(0,334),(0,365),(0,387),(0,388),(0,423)," +
     "(0,464),(0,483),(100,24),(100,45),(100,100),(100,202)," +

@@ -3090,8 +3090,8 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
     * TB common case costs what readSince costs; consumed, rewritten
     * and dv-changed dirs diff multiset-wise (pre = the removed/
     * dv-superseded dirs read at `v-1` signed +1, post = their rewrite
-    * outputs at `v` signed -1, ONE `sum(_sign)` aggregation over all
-    * steps — semantically the per-step EXCEPT ALL pair, planned as a
+    * outputs at `v` signed -1, ONE `sum(_graft_sign)` aggregation over
+    * all steps — semantically the per-step EXCEPT ALL pair, planned as a
     * single exchange that scans each step's dirs once), so the diff
     * cost scales with the dirs a commit actually TOUCHED, never the
     * table. Every intermediate version
@@ -3156,13 +3156,14 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
     var frames = Seq.empty[DataFrame]
     // Signed pre(+1)/post(-1) reads of the dirs each step touched,
     // version-tagged: ONE aggregation at the end computes every
-    // step's delete/insert diff — `sum(_sign)` grouped by (row,
+    // step's delete/insert diff — `sum(_graft_sign)` grouped by (row,
     // version) is exactly the EXCEPT ALL pair this replaced
     // (delete multiplicity = max(d, 0), insert = max(-d, 0); rows
     // present on both sides with equal counts cancel), but each
     // step's pre/post dirs are scanned ONCE instead of twice and the
     // whole feed pays one exchange instead of two per stepped
-    // version (guide §2.4).
+    // version (guide §2.4). The sign and its sum are staged under the
+    // reserved `_graft_*` names, so user columns never collide.
     var signed = Seq.empty[DataFrame]
     if (sinceVersion <= 0) {
       val e0 = entriesOf(spark, path, start)
@@ -3197,9 +3198,9 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
           removed ++ dvPrev), v - 1)
         val post = norm(readDirs(spark, path, v, eNow,
           rewriteOut ++ dvNow), v)
-        signed :+= pre.withColumn("_sign", lit(1L))
+        signed :+= pre.withColumn("_graft_sign", lit(1L))
           .withColumn("_commit_version", lit(v))
-        signed :+= post.withColumn("_sign", lit(-1L))
+        signed :+= post.withColumn("_graft_sign", lit(-1L))
           .withColumn("_commit_version", lit(v))
       }
       if (fresh.nonEmpty)
@@ -3215,7 +3216,7 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
       // work stays O(changed rows). The rate-limited stream source
       // caps versions per micro-batch and never gets here. The
       // signed buffer collapses BEFORE its aggregation, so the
-      // checkpointed rows still carry (_sign, _commit_version) and
+      // checkpointed rows still carry (_graft_sign, _commit_version) and
       // the final diff is unchanged.
       if (frames.length >= ChangeUnionWidth)
         frames = Seq(frames.reduce(_ unionByName _).localCheckpoint())
@@ -3233,10 +3234,10 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
           schema.fields.map(f => col(f.name)).toSeq :+
             col("_commit_version")
         val d = u.groupBy(keys: _*)
-          .agg(sum(col("_sign")).as("_d"))
-          .filter(col("_d") =!= 0L)
-          .withColumn("_change_type",
-            when(col("_d") > 0, lit("delete")).otherwise(lit("insert")))
+          .agg(sum(col("_graft_sign")).as("_graft_d"))
+          .filter(col("_graft_d") =!= 0L)
+          .withColumn("_change_type", when(col("_graft_d") > 0,
+            lit("delete")).otherwise(lit("insert")))
         val outNames = schema.fields.map(_.name).toSeq ++
           Seq("_change_type", "_commit_version")
         // |d| copies per surviving (row, version) — the same
@@ -3245,7 +3246,7 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
         // materializing an array
         val gen = org.apache.spark.sql.GraftSqlBridge.column(
           org.apache.spark.sql.catalyst.expressions.ReplicateRows(
-            (abs(col("_d")) +: outNames.map(col)).map(
+            (abs(col("_graft_d")) +: outNames.map(col)).map(
               org.apache.spark.sql.GraftSqlBridge.expression)))
         Seq(d.select(gen.as(outNames)))
       }

@@ -46,7 +46,7 @@ import org.apache.spark.sql.functions._
   * constant is folded into every persisted-artifact cache marker
   * ([[IvfPq.ensureBuilt]], [[PQ.ensureCodebooks]]), so artifacts built
   * by a previous algorithm miss the marker check and rebuild instead
-  * of being served silently. `graft.AnnPins` prints it beside the
+  * of being served silently. `graft.Dev pins` prints it beside the
   * regenerated oracle pins, so the pinned retrieval lists and the
   * marker version move together. */
 object AnnVersion {
@@ -494,7 +494,9 @@ object IvfPq {
   /** Probe: top-k exact-re-ranked neighbors per (query_id, q_emb)
     * query, reading only each query's nProbe nearest buckets and
     * ADC-scoring only those rows. Output: (query_id, rk, vec_id,
-    * dist) — squared L2, exact for every returned row.
+    * dist) — squared L2, exact for every returned row. Every probe
+    * requires unique query ids with non-null embeddings and throws
+    * IllegalArgumentException otherwise.
     *
     * `allowed` is the FILTERED-search hook (the `filter=` every
     * production vector store grew): a one-column `vec_id` frame of
@@ -628,19 +630,29 @@ object IvfPq {
     val buckets = pbRows.map(_.getAs[Int]("bucket")).distinct
     // the queries relation, re-shipped from the SAME collect: every
     // query row survives the coarse stage (rank 1 always passes the
-    // probe budget) and (query_id, q_emb) is unique by the probe
-    // contract, so the distinct collected pairs ARE the queries frame
-    // — the distance-table staging and the re-rank broadcast below
-    // build from this LocalRelation instead of re-running the queries
-    // subtree as two more sequential broadcast-build jobs (§2.4).
+    // probe budget), so the distinct collected pairs ARE the queries
+    // frame — the distance-table staging and the re-rank broadcast
+    // below build from this LocalRelation instead of re-running the
+    // queries subtree as two more sequential broadcast-build jobs
+    // (§2.4). The caller contract — unique query ids, each with a
+    // non-null q_emb — is checked here, on rows already collected
+    // (a duplicated query row surfaces as a repeated (query_id,
+    // bucket) pick): the driver-side distance tables keep one row per
+    // id, where the distributed form would pair every duplicate.
     val qSchema = org.apache.spark.sql.types.StructType(
       Seq(pbFrame.schema("query_id"), pbFrame.schema("q_emb")))
     val qRows = {
       val seen = scala.collection.mutable.LinkedHashMap
         .empty[Any, org.apache.spark.sql.Row]
+      val picks = scala.collection.mutable.HashSet.empty[(Any, Int)]
       pbRows.foreach { r =>
-        if (!seen.contains(r.get(0)))
-          seen(r.get(0)) = org.apache.spark.sql.Row(r.get(0), r.get(1))
+        val id = r.get(0)
+        require(!r.isNullAt(1), s"IvfPq.probe: query_id $id has a null q_emb")
+        require(picks.add((id, r.getInt(2))) &&
+          seen.get(id).forall(_.get(1) == r.get(1)),
+          s"IvfPq.probe: query_id $id appears in more than one query " +
+            "row — query ids must be unique")
+        seen.getOrElseUpdate(id, org.apache.spark.sql.Row(id, r.get(1)))
       }
       seen.values.toSeq
     }

@@ -238,11 +238,12 @@ object PQ {
     * elements 0, shorter-prefix fold); the (cid, d) entries sort by
     * the same (cid, then d) struct order `sort_array` uses (cids are
     * unique per sub, so the tie-break never fires); subs sort
-    * ascending exactly like the outer `sort_array`; a null q_emb
-    * yields no row (explode of a null slice array); a sub absent
-    * from the codebooks is absent from `dts` (inner join). The
-    * queries' (query_id, q_emb) rows are unique by the probe
-    * contract (both callers key them by vec_id). */
+    * ascending exactly like the outer `sort_array`; a sub absent
+    * from the codebooks is absent from `dts` (inner join). The one
+    * caller, [[IvfPq.probeFrom]], requires unique query ids with
+    * non-null q_emb before calling, so neither a null embedding nor
+    * a duplicated query row (which the distributed form would pair
+    * with every codebook row twice) reaches this function. */
   private[vector] def distanceTableRows(
       qRows: Seq[org.apache.spark.sql.Row],
       cbRows: Seq[org.apache.spark.sql.Row], m: Int,
@@ -253,22 +254,18 @@ object PQ {
         .groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
     val subs = bySub.keysIterator.filter(j => j >= 0 && j < m)
       .toSeq.sorted
-    qRows.flatMap { r =>
-      val emb = r.get(1)
-      if (emb == null) None
-      else {
-        val e = emb.asInstanceOf[scala.collection.Seq[Any]]
-        val ds = e.length / m
-        val dts: Seq[Seq[Double]] = subs.map { j =>
-          val sv = e.slice(j * ds, j * ds + ds)
-          bySub(j)
-            .map { case (cid, cSub) =>
-              (cid, l2sqLocal(sv, cSub, qFloat, cbFloat)) }
-            .sortBy(identity)
-            .map(_._2)
-        }
-        Some(org.apache.spark.sql.Row(r.get(0), dts))
+    qRows.map { r =>
+      val e = r.getAs[scala.collection.Seq[Any]](1)
+      val ds = e.length / m
+      val dts: Seq[Seq[Double]] = subs.map { j =>
+        val sv = e.slice(j * ds, j * ds + ds)
+        bySub(j)
+          .map { case (cid, cSub) =>
+            (cid, l2sqLocal(sv, cSub, qFloat, cbFloat)) }
+          .sortBy(identity)
+          .map(_._2)
       }
+      org.apache.spark.sql.Row(r.get(0), dts)
     }
   }
 

@@ -160,7 +160,7 @@ class BloomInjectSpec extends AnyFunSuite {
   }
 
   test("the injected probe measurably cuts the join shuffle") {
-    // the ScaleProbe bloom10 numbers (1.53M -> 335k records at 10x),
+    // the 10x-replica bloom probe numbers (1.53M -> 335k records at 10x),
     // pinned as a deterministic regression assertion at test scale:
     // record counts are exact properties of the plan, not timings
     val s2 = gatedSession()

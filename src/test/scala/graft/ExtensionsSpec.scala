@@ -46,4 +46,44 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(base)
     }
   }
+
+  test("the WindowExec log filter hides only the bounded-window warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.row_number
+    val spark = TestSpark.spark
+    GraftExtensions.quietBoundedWindowWarning()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val probe = new AbstractAppender("graft-window-probe", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    probe.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+      .getLoggerConfig(GraftExtensions.WindowExecLogger)
+    assert(cfg.getName == GraftExtensions.WindowExecLogger)
+    cfg.addAppender(probe, null, null)
+    ctx.updateLoggers()
+    try {
+      // a real unpartitioned window plans the warning in WindowExec
+      spark.range(5).withColumn("r", row_number().over(Window.orderBy("id")))
+        .collect()
+      val log = LogManager.getLogger(GraftExtensions.WindowExecLogger)
+      log.warn("No Partition Defined for Window operation! Moving all " +
+        "data to a single partition, this can cause serious performance " +
+        "degradation.")
+      log.warn("some other WindowExec warning")
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSeq == Seq("some other WindowExec warning"))
+    } finally {
+      cfg.removeAppender(probe.getName)
+      ctx.updateLoggers()
+      probe.stop()
+    }
+  }
 }

@@ -146,6 +146,27 @@ class IvfPqSpec extends AnyFunSuite {
       s"filtered adaptive probe under-filled: ${perQ.toMap}")
   }
 
+  test("probe rejects a duplicated query id and a null query embedding") {
+    val tmp = Files.createTempDirectory("graft-ivfpq-contract").toString
+    val cents = VectorIndex.kmeansCentroids(corpus, 4, iters = 1).cache()
+    IvfPq.build(corpus, cents, m = M, k = 8, s"$tmp/index")
+    val qs = queries.limit(3).collect()
+    def run(rows: Seq[org.apache.spark.sql.Row]): Unit =
+      IvfPq.probe(spark, s"$tmp/index", cents,
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          queries.schema),
+        m = M, topK = 5, nProbe = 8, shortlist = 20).collect()
+    run(qs.toSeq) // the well-formed batch probes fine
+    // nProbe above the centroid count keeps every coarse pick, so each
+    // offending row reaches the driver: the same id with a second
+    // embedding, the same row twice, a null embedding
+    val dupId = org.apache.spark.sql.Row(qs(0).get(0), qs(1).get(1))
+    intercept[IllegalArgumentException](run(qs.toSeq :+ dupId))
+    intercept[IllegalArgumentException](run(qs.toSeq :+ qs(0)))
+    val nullEmb = org.apache.spark.sql.Row(-1L, null)
+    intercept[IllegalArgumentException](run(qs.toSeq :+ nullEmb))
+  }
+
   test("widening nProbe+shortlist to the limit recovers brute force") {
     val tmp = Files.createTempDirectory("graft-ivfpq-limit").toString
     val cents = VectorIndex.centroids(corpus, 4).cache()

@@ -49,6 +49,20 @@ class ManifestChangesSpec extends AnyFunSuite {
       (2L, 99L, "delete", 5L), (7L, 1L, "insert", 5L)))
   }
 
+  test("readChanges: user columns named _sign and _d feed unchanged") {
+    Seq("_sign", "_d").foreach { c =>
+      val t = s"${Files.createTempDirectory("graft-cdfr")}/t"
+      ManifestTable.append(spark,
+        Seq((1L, 5L), (2L, 5L)).toDF("id", c), t,
+        statsCols = Seq("id"))                                    // v1
+      ManifestTable.updateRange(spark, t, "id", 2L, 2L,
+        Seq(c -> lit(-7L)))                                       // v2
+      assert(changes(t, 0L, 2L) == Seq((1L, 5L, "insert", 1L),
+        (2L, -7L, "insert", 2L), (2L, 5L, "delete", 2L),
+        (2L, 5L, "insert", 1L)).sorted, s"column $c")
+    }
+  }
+
   test("readChanges: maintenance is invisible; deleteKeys and dropPartitions feed") {
     val t = s"${Files.createTempDirectory("graft-cdfm")}/t"
     ManifestTable.append(spark,

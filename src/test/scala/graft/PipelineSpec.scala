@@ -31,12 +31,16 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.util.QueryExecutionListener
     import org.apache.spark.sql.execution.QueryExecution
     @volatile var seen: Option[(Long, Double)] = None
+    @volatile var seenFull: Option[Long] = None
     val listener = new QueryExecutionListener {
       override def onSuccess(fn: String, qe: QueryExecution,
           duration: Long): Unit = {
         qe.observedMetrics.get("graft.curate").foreach { row =>
           seen = Some((row.getAs[Long]("rows_kept"),
             row.getAs[Double]("mean_quality")))
+        }
+        qe.observedMetrics.get("graft.curate_full").foreach { row =>
+          seenFull = Some(row.getAs[Long]("rows_kept"))
         }
       }
       override def onFailure(fn: String, qe: QueryExecution,
@@ -53,6 +57,17 @@ class PipelineSpec extends AnyFunSuite {
       assert(seen.isDefined, "observe metrics never arrived")
       assert(seen.get._1 == n)
       assert(seen.get._2 >= 0.3 && seen.get._2 <= 1.0)
+      // the registered composed chain ends in a global sort, whose
+      // range exchange samples its input in a separate pass: the
+      // metric must still count each returned row once
+      val full = SparkEntry.queries("q112_curate_full")(spark,
+        "/root/testdata/sf0.001").collect()
+      val deadline2 = System.nanoTime() + 10e9.toLong
+      while (seenFull.isEmpty && System.nanoTime() < deadline2)
+        Thread.sleep(50)
+      assert(full.nonEmpty)
+      assert(seenFull.contains(full.length.toLong),
+        s"graft.curate_full rows_kept $seenFull for ${full.length} rows")
     } finally spark.listenerManager.unregister(listener)
   }
 

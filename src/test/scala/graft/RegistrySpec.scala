@@ -11,7 +11,7 @@ class RegistrySpec extends AnyFunSuite {
 
   test("every registered query has an oracle (allow-list empty since round 7)") {
     // q100/q110 emit overlap-with-exact-top-k recall counts (pinned
-    // deterministic index output, AnnPins); q63/q94 emit error-bound
+    // deterministic index output, Dev pins); q63/q94 emit error-bound
     // booleans beside DuckDB-recomputed exact values. Nothing is
     // rows-only any more — keep it that way.
     val noOracle = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)

@@ -3,19 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (session startup is
-  * seconds; suites share it and never stop it — the JVM exit cleans up). */
+  * seconds; suites share it and never stop it — the JVM exit cleans up).
+  * Built by the same factory as the mains, so the tests run under the
+  * confs Verify and Bench use. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
 }
