@@ -67,7 +67,6 @@ object Tables {
     * parquet at a path that was already probed in this session. */
   def invalidateSpreadCache(): Unit = {
     spreadProbeCache.clear()
-    countCache.clear()
     // the SQL-surface view cache has the identical same-session
     // staleness contract — one invalidation point for both
     Sql.invalidateViewCache()
@@ -75,27 +74,6 @@ object Tables {
 
   private val spreadProbeCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), java.lang.Boolean]()
-
-  /** Memoized `df.count()` for STALENESS-MARKER counts only (the
-    * `rows=N` component of build-once artifact markers): every
-    * ensure* wrapper counts its INPUT dataset to detect a
-    * regenerated corpus, and on the cache-HIT path that count job was
-    * the only work left — dozens of ensure-backed queries each paid a
-    * parquet count of the same immutable input per run. Keyed like
-    * [[spread]]'s probe memo ((session UUID, plan hash) — a fresh
-    * session never inherits an entry) and cleared by
-    * [[invalidateSpreadCache]] under the same same-session rewrite
-    * contract. Use ONLY for counts over the read-only input dataset;
-    * counts that verify a just-written table must stay live. */
-  def memoCount(df: DataFrame): Long = {
-    val key = (org.apache.spark.sql.GraftSqlBridge.sessionKey(df.sparkSession),
-      df.queryExecution.logical.semanticHash())
-    if (countCache.size > 4096) countCache.clear()
-    countCache.computeIfAbsent(key, _ => df.count())
-  }
-
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.lang.Long]()
 
   /** Normalize `events.ts` to session-zoned TimestampType across the
     * generator's two historical physical layouts: TIMESTAMP(NANOS)

@@ -3,7 +3,6 @@ package graft.operators
 import graft.{GraftQuery, Tables}
 import graft.layout.{Layout, RuntimeFilters}
 import graft.operators.Relational.{decSum, decSumSql}
-import graft.vector.ArtifactCache
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,8 +15,9 @@ import org.apache.spark.sql.functions._
   * happens, never the answer.
   *
   * The partitioned/bucketed layouts are amortized offline artifacts
-  * (the q110-index pattern): built once per dataset under /tmp behind
-  * an [[ArtifactCache]] marker, reused by every subsequent query run.
+  * (the q110-index pattern): built once per dataset under /tmp through
+  * [[graft.Artifacts.ensure]], reused by every subsequent query run
+  * until the dataset's input files change.
   */
 object LayoutQueries {
 
@@ -25,28 +25,28 @@ object LayoutQueries {
     * auto-invalidate (same contract as [[graft.vector.AnnVersion]]). */
   private val LayoutVersion = 11 // r13: + per-dir exact column sums (metadata-only SUM)
 
-  private def datasetKey(d: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+  private def layoutRoot(d: String): String = graft.Artifacts.dir(d, "layout")
 
-  private def layoutRoot(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-layout-${datasetKey(d)}"
-
-  /** Orders partitioned by `o_year=year(o_orderdate)` — the 100 TB
-    * layout for a date-organized fact table. Built once per dataset;
-    * the marker folds in [[LayoutVersion]] and the row count so code
-    * changes and regenerated datasets both invalidate. */
-  def ensurePartitionedOrders(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/orders_by_year"
-    val orders = Tables.orders(s, d)
-    val expect = s"layout=$LayoutVersion part=o_year rows=${Tables.memoCount(orders)}"
-    if (!ArtifactCache.hit(path, expect)) {
-      Layout.writePartitioned(orders, path, "o_year",
-        year(col("o_orderdate")))
-      ArtifactCache.stamp(path, expect)
-    }
+  /** One build-once layout fixture: `build` writes it at
+    * `<layoutRoot>/name` from the dataset's `table`, whose parquet
+    * files are the fingerprinted input; returns the path. The recipe
+    * folds in [[LayoutVersion]], so code changes and a rewritten table
+    * both invalidate. */
+  private def fixture(s: SparkSession, d: String, name: String,
+      recipe: String, table: String)(build: String => Unit): String = {
+    val path = s"${layoutRoot(d)}/$name"
+    graft.Artifacts.ensure(s, path, Seq(s"$d/$table.parquet"),
+      s"layout=$LayoutVersion $recipe")(build(path))
     path
   }
+
+  /** Orders partitioned by `o_year=year(o_orderdate)` — the 100 TB
+    * layout for a date-organized fact table. Built once per dataset. */
+  def ensurePartitionedOrders(s: SparkSession, d: String): String =
+    fixture(s, d, "orders_by_year", "part=o_year", "orders") { path =>
+      Layout.writePartitioned(Tables.orders(s, d), path, "o_year",
+        year(col("o_orderdate")))
+    }
 
   /** Scale-derived bucket count for the recurring-join layout: one
     * bucket per `targetBucketBytes` of the dataset's orders table,
@@ -80,7 +80,7 @@ object LayoutQueries {
   def ensureBucketedPair(s: SparkSession, d: String,
       buckets: Int = 0): (String, String) = {
     val b = if (buckets > 0) buckets else bucketCountFor(s, d)
-    val key = s"${b}_${datasetKey(d)}"
+    val key = s"${b}_${graft.Artifacts.locationKey(d)}"
     val ordersTbl = s"graft_orders_bk_$key"
     val custTbl = s"graft_customer_bk_$key"
     if (!s.catalog.tableExists(ordersTbl))
@@ -100,17 +100,11 @@ object LayoutQueries {
     * min/max (zone-map) layout for the fine-grained time axis where
     * Hive partitioning would explode directories. Built once per
     * dataset behind the usual marker. */
-  def ensureSortedLineitem(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/lineitem_by_shipdate"
-    val li = Tables.lineitem(s, d)
-    val expect =
-      s"layout=$LayoutVersion sort=l_shipdate files=16 rows=${Tables.memoCount(li)}"
-    if (!ArtifactCache.hit(path, expect)) {
-      Layout.writeRangeSorted(li, path, 16, "l_shipdate")
-      ArtifactCache.stamp(path, expect)
+  def ensureSortedLineitem(s: SparkSession, d: String): String =
+    fixture(s, d, "lineitem_by_shipdate", "sort=l_shipdate files=16",
+        "lineitem") { path =>
+      Layout.writeRangeSorted(Tables.lineitem(s, d), path, 16, "l_shipdate")
     }
-    path
-  }
 
   /** Lineitem Z-ordered on (l_partkey, l_suppkey) into 64 files — the
     * two-hot-column layout: each file tiles ~1/8 of BOTH key ranges,
@@ -118,83 +112,52 @@ object LayoutQueries {
     * on EITHER column (a single-axis sort prunes only its lead
     * column — contrasted in ZOrderSpec). Built once per dataset behind
     * the usual marker. */
-  def ensureZOrderedLineitem(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/lineitem_zorder"
-    val li = Tables.lineitem(s, d)
-    val expect =
-      s"layout=$LayoutVersion zorder=l_partkey,l_suppkey files=64 rows=${Tables.memoCount(li)}"
-    if (!ArtifactCache.hit(path, expect)) {
-      Layout.writeZOrdered(li, path, 64, "l_partkey", "l_suppkey")
-      ArtifactCache.stamp(path, expect)
+  def ensureZOrderedLineitem(s: SparkSession, d: String): String =
+    fixture(s, d, "lineitem_zorder", "zorder=l_partkey,l_suppkey files=64",
+        "lineitem") { path =>
+      Layout.writeZOrdered(Tables.lineitem(s, d), path, 64, "l_partkey",
+        "l_suppkey")
     }
-    path
-  }
 
   /** Documents posting table (term → doc_id) for keyword search —
     * built once per dataset behind the usual marker. 16 range slices:
     * at test scale that is plenty for the footer-pruning contract; at
     * 100 TB the count scales like any range layout (slices ≈ posting
     * bytes / 128 MB). */
-  def ensurePostings(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/doc_postings"
-    val docs = Tables.documents(s, d)
-    val expect =
-      s"layout=$LayoutVersion postings=term,doc_id files=16 rows=${Tables.memoCount(docs)}"
-    if (!ArtifactCache.hit(path, expect)) {
-      graft.text.InvertedIndex.build(docs, path, 16)
-      ArtifactCache.stamp(path, expect)
+  def ensurePostings(s: SparkSession, d: String): String =
+    fixture(s, d, "doc_postings", "postings=term,doc_id files=16", "documents") { path =>
+      graft.text.InvertedIndex.build(Tables.documents(s, d), path, 16)
     }
-    path
-  }
 
   /** Scored posting table (term, doc_id, dl, tf + `_stats`) for
     * ranked keyword search — built once per dataset behind the usual
     * marker. */
-  def ensureScoredPostings(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/doc_postings_scored"
-    val docs = Tables.documents(s, d)
-    val expect =
-      s"layout=$LayoutVersion scored_postings files=16 rows=${Tables.memoCount(docs)}"
-    if (!ArtifactCache.hit(path, expect)) {
-      graft.text.InvertedIndex.buildScored(docs, path, 16)
-      ArtifactCache.stamp(path, expect)
+  def ensureScoredPostings(s: SparkSession, d: String): String =
+    fixture(s, d, "doc_postings_scored", "scored_postings files=16", "documents") { path =>
+      graft.text.InvertedIndex.buildScored(Tables.documents(s, d), path, 16)
     }
-    path
-  }
 
   /** Positional posting table (term, doc_id, positions) for phrase
     * search — built once per dataset behind the usual marker. */
-  def ensurePositionalPostings(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/doc_postings_positional"
-    val docs = Tables.documents(s, d)
-    val expect =
-      s"layout=$LayoutVersion positional_postings files=16 rows=${Tables.memoCount(docs)}"
-    if (!ArtifactCache.hit(path, expect)) {
-      graft.text.InvertedIndex.buildPositional(docs, path, 16)
-      ArtifactCache.stamp(path, expect)
+  def ensurePositionalPostings(s: SparkSession, d: String): String =
+    fixture(s, d, "doc_postings_positional", "positional_postings files=16", "documents") { path =>
+      graft.text.InvertedIndex.buildPositional(Tables.documents(s, d), path, 16)
     }
-    path
-  }
 
   /** Documents as a [[graft.sinks.ManifestTable]] — the
     * incremental-ingest shape, versions v1–v4 time-travelable. Built
     * once per dataset behind the usual marker. */
-  def ensureManifestDocs(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    // four RANGE-disjoint appends with doc_id + lang stats recorded —
-    // the shape a time-ordered ingest naturally produces, which is
-    // what makes q128's manifest-level dir pruning non-vacuous (and,
-    // with the per-dir row counts + null counts every append records,
-    // lets q139's whole-table COUNT/COUNT(col)/MIN/MAX answer from
-    // the manifest alone)
-    val expect =
-      s"layout=$LayoutVersion manifest=4ranged-total+stats3 rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureManifestDocs(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest", "manifest=4ranged-total+stats3",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+      val n = docs.count()
+      // four RANGE-disjoint appends with doc_id + lang stats recorded —
+      // the shape a time-ordered ingest naturally produces, which is
+      // what makes q128's manifest-level dir pruning non-vacuous (and,
+      // with the per-dir row counts + null counts every append records,
+      // lets q139's whole-table COUNT/COUNT(col)/MIN/MAX answer from
+      // the manifest alone)
       val q = math.max(n / 4, 1)
       (0 until 4).foreach { i =>
         // commit 1 is open-below and commit 4 open-above, so EVERY
@@ -206,28 +169,21 @@ object LayoutQueries {
           docs.filter(loOk && hiOk), path,
           statsCols = Seq("doc_id", "lang"))
       }
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** Events as a HIDDEN-PARTITIONED manifest table — `days(ts)`
     * transform, three id-ranged commits (the natural arrival shape:
     * each commit holds many days), so the partitioned append routes
     * every (commit, day) to its own partition-pure dir whose entry
     * records the derived day in the manifest. */
-  def ensurePartitionedEvents(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/events_part_days"
-    val ev = Tables.events(s, d)
-    val n = Tables.memoCount(ev)
+  def ensurePartitionedEvents(s: SparkSession, d: String): String =
     // -utc: rebuilt once after days() switched to UTC epoch
     // arithmetic (values identical under the UTC session, but the
     // artifact should provably come from the current derivation)
-    val expect = s"layout=$LayoutVersion manifest=days-part-utc rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    fixture(s, d, "events_part_days", "manifest=days-part-utc",
+        "events") { path =>
+      val ev = Tables.events(s, d)
+      val n = ev.count()
       val q = math.max(n / 3, 1)
       (0 until 3).foreach { i =>
         val loOk = if (i == 0) lit(true) else col("event_id") >= i * q
@@ -237,25 +193,18 @@ object LayoutQueries {
           partitionSpec =
             Seq(graft.sinks.PartitionTransform.PDays("ts")))
       }
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** Documents as a lang-identity-partitioned manifest table with the
     * 'de' partition DROPPED metadata-only — the ALTER TABLE ... DROP
     * PARTITION retention shape: the drop commits a new manifest
     * without the matching entries, zero rows moved (the dropped dirs
     * physically remain for older snapshots until vacuum). */
-  def ensureDroppedLangDocs(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_part_dropped"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=lang-part-drop rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureDroppedLangDocs(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_part_dropped", "manifest=lang-part-drop",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+      val n = docs.count()
       val q = math.max(n / 2, 1)
       Seq(col("doc_id") < q, col("doc_id") >= q).foreach { f =>
         graft.sinks.ManifestTable.append(s, docs.filter(f), path,
@@ -267,10 +216,7 @@ object LayoutQueries {
         path, Map("lang" -> "de"))
       require(dropped == 2, // one 'de' dir per commit
         s"ensureDroppedLangDocs: expected to drop 2 dirs, got $dropped")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** Documents built through the WRITE-AUDIT-PUBLISH gate: even ids
     * appended directly; odd ids staged twice — a poisoned candidate
@@ -278,15 +224,9 @@ object LayoutQueries {
     * that publishes. The final table must equal the plain source:
     * the rejected candidate left no trace, the published one landed
     * whole. */
-  def ensureWapDocs(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_wap"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=wap rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureWapDocs(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_wap", "manifest=wap", "documents") { path =>
+      val docs = Tables.documents(s, d)
       val M = graft.sinks.ManifestTable
       M.append(s, docs.filter(col("doc_id") % 2 === 0), path,
         statsCols = Seq("doc_id"))
@@ -305,10 +245,7 @@ object LayoutQueries {
         .filter(col("lang").isNull).count() == 0,
         "ensureWapDocs: clean candidate failed its audit")
       M.publish(s, path, "clean")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** Documents as a manifest table clustered BY LANGUAGE — one commit
     * per lang, each recording string bounds on `lang` (plus long
@@ -317,17 +254,13 @@ object LayoutQueries {
     * 'es'` in plain SQL prunes to exactly one commit dir from the
     * manifest alone. Built once per dataset behind the usual
     * marker. */
-  def ensureManifestDocsByLang(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_bylang"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
+  def ensureManifestDocsByLang(s: SparkSession, d: String): String =
     // strstats2: per-dir null counts recorded — what proves each dir
     // single-group in `lang` for q140's metadata-only GROUP BY
-    val expect = s"layout=$LayoutVersion manifest=bylang+strstats2 rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    fixture(s, d, "docs_manifest_bylang", "manifest=bylang+strstats2",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+      val n = docs.count()
       import s.implicits._
       val langs = docs.select(col("lang")).distinct()
         .as[String].collect().sorted
@@ -341,10 +274,7 @@ object LayoutQueries {
       // this dataset; a real router would add an explicit null commit)
       require(graft.sinks.ManifestTable.read(s, path).count() == n,
         "ensureManifestDocsByLang: lang clustering dropped rows")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** The q127 manifest layout after one [[graft.sinks.ManifestTable.merge]]
     * upsert batch: every doc_id ≡ 3 (mod 10) re-ingested with a
@@ -353,15 +283,11 @@ object LayoutQueries {
     * the usual marker — exercises the copy-on-write upsert the
     * reference's keyed re-ingest (q106's MERGE shape) needs once the
     * corpus lives in a manifest table. */
-  def ensureMergedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_merged"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=4ranged+merge rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureMergedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_merged", "manifest=4ranged+merge",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+      val n = docs.count()
       val q = math.max(n / 4, 1)
       (0 until 4).foreach { i =>
         val loOk = if (i == 0) lit(true) else col("doc_id") >= i * q
@@ -378,10 +304,7 @@ object LayoutQueries {
         .select(cols.map(col): _*)
       graft.sinks.ManifestTable.merge(s,
         updates.unionByName(inserts), path, "doc_id")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** Documents ingested interleaved (4 commits by doc_id mod 4) WITH
     * per-dir Bloom filters on doc_id: min/max stats are useless here
@@ -389,24 +312,16 @@ object LayoutQueries {
     * KEY SET is small — so a point lookup (`doc_id = x`, `IN (...)`)
     * prunes to the dirs whose filters might contain the key. Built
     * once per dataset behind the usual marker. */
-  def ensureBloomManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_bloom"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=mod4+bloom rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureBloomManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_bloom", "manifest=mod4+bloom",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
       (0 until 4).foreach { i =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(pmod(col("doc_id"), lit(4)) === i), path,
           statsCols = Seq("doc_id"), bloomCols = Seq("doc_id"))
       }
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** Documents keyed by a STRING id (`doc_key = 'doc-' || doc_id` —
     * the reference's hottest lookup shape is by CVE-id string,
@@ -416,26 +331,18 @@ object LayoutQueries {
     * the whole key domain (useless), so the string Bloom filter is
     * the only prune a `WHERE doc_key = '…'` lookup gets. Built once
     * per dataset behind the usual marker. */
-  def ensureStrBloomManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_strbloom"
-    val docs = Tables.documents(s, d)
-      .withColumn("doc_key",
-        concat(lit("doc-"), col("doc_id").cast("string")))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=mod4+strbloom rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureStrBloomManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_strbloom", "manifest=mod4+strbloom",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .withColumn("doc_key",
+          concat(lit("doc-"), col("doc_id").cast("string")))
       (0 until 4).foreach { i =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(pmod(col("doc_id"), lit(4)) === i), path,
           statsCols = Seq("doc_key"), bloomCols = Seq("doc_key"))
       }
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** The STRING-keyed twin of [[ensureMergedManifest]]: documents
     * keyed by `doc_key = 'doc-' || doc_id` (the reference upserts by
@@ -447,18 +354,14 @@ object LayoutQueries {
     * `zzz-`-keyed inserts (past every existing bound) for
     * doc_id ≡ 0 (mod 25). Built once per dataset behind the usual
     * marker. */
-  def ensureStrMergedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_strmerged"
-    val docs = Tables.documents(s, d)
-      .select(concat(lit("doc-"), col("doc_id").cast("string"))
-          .as("doc_key"),
-        col("lang"), col("n_chars"), col("doc_id"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=strranged+merge rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureStrMergedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_strmerged", "manifest=strranged+merge",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(concat(lit("doc-"), col("doc_id").cast("string"))
+            .as("doc_key"),
+          col("lang"), col("n_chars"), col("doc_id"))
+      val n = docs.count()
       val digit = substring(col("doc_key"), 5, 1).cast("int")
       val groups = Seq((0, 2), (3, 4), (5, 6), (7, 9))
       groups.foreach { case (lo, hi) =>
@@ -478,10 +381,7 @@ object LayoutQueries {
         .select(cols.map(col): _*)
       graft.sinks.ManifestTable.merge(s,
         updates.unionByName(inserts), path, "doc_key")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A documents-derived manifest table whose every MUTATION happens
     * through SQL statements (ManifestSqlRules): three `INSERT INTO`
@@ -492,16 +392,12 @@ object LayoutQueries {
     * reference's users mutate their one real table — typed SQL, not a
     * programmatic API (INSERT at /root/reference/processor.py:55-62).
     * Built once per dataset behind the usual marker. */
-  def ensureSqlDmlManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_sqldml"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=sqldml rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureSqlDmlManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_sqldml", "manifest=sqldml",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       val q = math.max(n / 4, 1)
       // seed commit (CTAS stand-in) through the same format's write
       // half; every mutation AFTER this line is a SQL statement
@@ -532,10 +428,7 @@ object LayoutQueries {
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
         "DELETE FROM graft_sqldml_target WHERE doc_id BETWEEN 100 AND 200"
       ).foreach(s.sql(_).collect())
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A documents-derived manifest table mutated by the SQL UPDATE
     * family (ManifestSqlRules → ManifestTable.updateRange /
@@ -548,16 +441,12 @@ object LayoutQueries {
     * UPDATE (in-place patch of overlapping dirs only), one
     * string-IN UPDATE, one whole-table UPDATE. Built once per
     * dataset behind the usual marker. */
-  def ensureSqlUpdatedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_sqlupd"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=sqlupd rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureSqlUpdatedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_sqlupd", "manifest=sqlupd",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       val q = math.max(n / 4, 1)
       (0L until 4L).foreach { i =>
         val lo = i * q
@@ -577,10 +466,7 @@ object LayoutQueries {
           |WHERE lang IN ('de', 'fr')""".stripMargin,
         "UPDATE graft_sqlupd_target SET n_chars = n_chars + 1"
       ).foreach(s.sql(_).collect())
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A documents-derived manifest table mutated by the COLUMN-WISE
     * SQL MERGE (ManifestSqlRules → ManifestTable.mergeUpdate): the
@@ -592,16 +478,12 @@ object LayoutQueries {
     * their ORIGINAL lang — the proof this is a patch, not a
     * whole-row replace. Built once per dataset behind the usual
     * marker. */
-  def ensureSqlMergeUpdatedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_sqlmupd"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=sqlmupd rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureSqlMergeUpdatedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_sqlmupd", "manifest=sqlmupd",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       val q = math.max(n / 4, 1)
       (0L until 4L).foreach { i =>
         val lo = i * q
@@ -627,10 +509,7 @@ object LayoutQueries {
           |USING graft_sqlmupd_updates u ON t.doc_id = u.doc_id
           |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A documents-derived manifest table mutated by the FULL
     * ordered-clause SQL MERGE (ManifestSqlRules.generalMerge →
@@ -642,16 +521,12 @@ object LayoutQueries {
     * /root/reference/download.py:17-35). Seeded as 4 range-sliced
     * commits so the key prune has prey. Built once per dataset
     * behind the usual marker. */
-  def ensureMergeClausesManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_mclauses"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=mclauses rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureMergeClausesManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_mclauses", "manifest=mclauses",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       val q = math.max(n / 4, 1)
       (0L until 4L).foreach { i =>
         val lo = i * q
@@ -682,10 +557,7 @@ object LayoutQueries {
           |WHEN NOT MATCHED AND u.n_chars % 2 = 0 THEN INSERT *
           |WHEN NOT MATCHED BY SOURCE AND t.doc_id % 50 = 49
           |  THEN UPDATE SET n_chars = 0""".stripMargin).collect()
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table mutated by the GENERAL-predicate SQL DML pair —
     * the statements a migrating Delta/Iceberg user writes first:
@@ -696,16 +568,12 @@ object LayoutQueries {
     * `updateWhere`: the predicate runs verbatim in the staged
     * rewrite, dirs prune by the scan's own conjunct probe. Built
     * once per dataset behind the usual marker. */
-  def ensureGeneralDmlManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_gendml"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=gendml rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureGeneralDmlManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_gendml", "manifest=gendml",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       val q = math.max(n / 4, 1)
       (0L until 4L).foreach { i =>
         val lo = i * q
@@ -725,10 +593,7 @@ object LayoutQueries {
       s.sql(
         "UPDATE graft_gendml_target SET n_chars = n_chars + 11 " +
           "WHERE lang = 'en' AND (n_chars < 300 OR n_chars > 900)")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table upserted through a PARTIAL-COLUMN-INSERT SQL
     * MERGE — `WHEN NOT MATCHED THEN INSERT (cols) VALUES (…)` with
@@ -739,16 +604,11 @@ object LayoutQueries {
     * table-width source. Built once per dataset behind the usual
     * marker. */
   def ensurePartialInsertMergedManifest(s: SparkSession, d: String)
-      : String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_pins"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=pins rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      : String =
+    fixture(s, d, "docs_manifest_pins", "manifest=pins", "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       val q = math.max(n / 4, 1)
       (0L until 4L).foreach { i =>
         val lo = i * q
@@ -777,10 +637,7 @@ object LayoutQueries {
           |  THEN INSERT (doc_id, n_chars) VALUES (u.doc_id, u.n_chars * 2)
           |WHEN NOT MATCHED THEN INSERT (doc_id, n_chars)
           |  VALUES (u.doc_id, 0)""".stripMargin).collect()
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table whose n_chars column was INT for its first two
     * commits, WIDENED to BIGINT as one metadata commit
@@ -789,16 +646,12 @@ object LayoutQueries {
     * UPDATE straddling both eras — the int32 files read widened at
     * scan, zero data movement at the widen itself. Built once per
     * dataset behind the usual marker. */
-  def ensureWidenedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_widen"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=widen rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureWidenedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_widen", "manifest=widen",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       // two INT-era dirs (doc lengths fit int — the cast is exact)
       Seq(0L, 2L).foreach { r =>
         graft.sinks.ManifestTable.append(s,
@@ -822,10 +675,7 @@ object LayoutQueries {
       s.sql(
         "UPDATE graft_widen_target SET n_chars = n_chars + 5 " +
           "WHERE doc_id % 10 = 3")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A NESTED-schema manifest table — documents re-shaped as
     * (doc_id, meta STRUCT<lang, n_chars>) with `statsCols` on the
@@ -836,17 +686,13 @@ object LayoutQueries {
     * FileIndex probe as top-level filters. Sliced into 4 n_chars
     * RANGES so the nested range filter has genuinely disjoint dirs
     * to skip. Built once per dataset behind the usual marker. */
-  def ensureNestedStatsManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_nested"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-        struct(col("lang"), col("n_chars")).as("meta"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=nested rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureNestedStatsManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_nested", "manifest=nested",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"),
+          struct(col("lang"), col("n_chars")).as("meta"))
+      val n = docs.count()
       // quartile slices on the LEAF value: nested-range-disjoint dirs
       val qs = docs.select(col("meta.n_chars").as("nc"))
         .stat.approxQuantile("nc", Array(0.25, 0.5, 0.75), 0.001)
@@ -861,10 +707,7 @@ object LayoutQueries {
       }
       require(graft.sinks.ManifestTable.read(s, path).count() == n,
         "ensureNestedStatsManifest: quantile slicing dropped rows")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table grown through a BRANCH lifecycle: main holds
     * the doc_id%3==0 slice; a branch forks, stages TWO commits (the
@@ -873,16 +716,12 @@ object LayoutQueries {
     * cache marker stamps only after the fast-forward, so the built
     * artifact IS the post-fast-forward table. Built once per dataset
     * behind the usual marker. */
-  def ensureBranchedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_branch"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=branch rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureBranchedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_branch", "manifest=branch",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       graft.sinks.ManifestTable.append(s,
         docs.filter(col("doc_id") % 3 === 0), path,
         statsCols = Seq("doc_id"))
@@ -903,26 +742,19 @@ object LayoutQueries {
         .readBranch(s, path, "ingest").count() == n,
         "ensureBranchedManifest: the branch audit read lost rows")
       graft.sinks.ManifestTable.fastForwardBranch(s, path, "ingest")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A NESTED-schema manifest table whose LEAF `meta.n_chars` was
     * renamed to `meta.chars` as one field-id metadata commit: rows
     * committed BEFORE the rename resolve the leaf INSIDE its struct
     * by nested parquet field id, rows appended after land under the
     * new shape. Built once per dataset behind the usual marker. */
-  def ensureNestedRenamedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_nrename"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=nrename rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureNestedRenamedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_nrename", "manifest=nrename",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       graft.sinks.ManifestTable.append(s,
         docs.filter(col("doc_id") % 2 === 0)
           .select(col("doc_id"),
@@ -938,10 +770,7 @@ object LayoutQueries {
         path, statsCols = Seq("doc_id", "meta.lang", "meta.chars"))
       require(graft.sinks.ManifestTable.read(s, path).count() == n,
         "ensureNestedRenamedManifest: parity slicing dropped rows")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A NESTED-schema manifest table patched by a NESTED-field SQL
     * UPDATE — `SET meta.n_chars = meta.n_chars + 7 WHERE doc_id % 10
@@ -949,17 +778,11 @@ object LayoutQueries {
     * (in-place leaf patch; NULL parents stay NULL), routed by the
     * general-predicate update path. Built once per dataset behind
     * the usual marker. */
-  def ensureNestedUpdatedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_nupd"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-        struct(col("lang"), col("n_chars")).as("meta"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=nupd rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureNestedUpdatedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_nupd", "manifest=nupd", "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"),
+          struct(col("lang"), col("n_chars")).as("meta"))
       Seq(0L, 1L).foreach { r =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(col("doc_id") % 2 === r), path,
@@ -970,10 +793,7 @@ object LayoutQueries {
       s.sql(
         "UPDATE graft_nupd_target " +
           "SET meta.n_chars = meta.n_chars + 7 WHERE doc_id % 10 = 3")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table grown through a branch lifecycle WITH
     * MID-BRANCH DML — the audit-fix workflow: main holds the
@@ -984,16 +804,11 @@ object LayoutQueries {
     * both), then fast-forwards. Main obliviousness and base physical
     * identity are REQUIRED mid-build. Built once per dataset behind
     * the usual marker. */
-  def ensureBranchDmlManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_brdml"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=brdml rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureBranchDmlManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_brdml", "manifest=brdml",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
       graft.sinks.ManifestTable.append(s,
         docs.filter(col("doc_id") % 3 === 0), path,
         statsCols = Seq("doc_id", "lang", "n_chars"))
@@ -1014,10 +829,7 @@ object LayoutQueries {
         == baseFiles,
         "ensureBranchDmlManifest: branch DML touched main's dirs")
       graft.sinks.ManifestTable.fastForwardBranch(s, path, "fix")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table grown through the STREAM-WAP loop — streaming
     * ingest staged on a branch with the exactly-once batchId
@@ -1032,17 +844,11 @@ object LayoutQueries {
     * [[graft.streaming.Streams.branchSinkWriter]]; the foreachBatch
     * wrapper itself is ManifestStreamSpec's job. Built once per
     * dataset behind the usual marker. */
-  def ensureStreamWapManifest(s: SparkSession, d: String): String = {
-    import graft.sinks.ManifestTable
-    val path = s"${layoutRoot(d)}/docs_manifest_swap"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=swap rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureStreamWapManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_swap", "manifest=swap", "documents") { path =>
+      import graft.sinks.ManifestTable
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
       ManifestTable.append(s, docs.filter(col("doc_id") % 4 === 0),
         path, statsCols = Seq("doc_id", "lang"))
       val baseFiles = ManifestTable.read(s, path).inputFiles.toSet
@@ -1071,10 +877,7 @@ object LayoutQueries {
       require(ManifestTable.appendToBranchIfFresh(s, slice(3), path,
         "ingest", batchId = 2L, statsCols = Seq("doc_id", "lang")))
       ManifestTable.fastForwardBranch(s, path, "ingest")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table mutated by a SUBQUERY-predicate SQL DELETE —
     * `DELETE … WHERE key IN (SELECT key … WHERE lang = 'en' AND
@@ -1084,18 +887,13 @@ object LayoutQueries {
     * enforced here so a routing regression fails the BUILD, not just
     * the oracle). Built once per dataset behind the usual marker. */
   def ensureSubqueryDeletedManifest(s: SparkSession, d: String)
-      : String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_sqdel"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-        concat(lit("d"), col("doc_id")).as("key"),
-        col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=sqdel rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      : String =
+    fixture(s, d, "docs_manifest_sqdel", "manifest=sqdel",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"),
+          concat(lit("d"), col("doc_id")).as("key"),
+          col("lang"), col("n_chars"))
       Seq(0L, 1L).foreach { r =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(col("doc_id") % 2 === r), path,
@@ -1118,10 +916,7 @@ object LayoutQueries {
         before.map(e => e.dir -> e.files).toMap,
         "ensureSubqueryDeletedManifest: merge-on-read must rewrite " +
           "zero data files")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table mutated by an OVER-CAP `IN (subquery)` DELETE:
     * the key set exceeds the inline-literal cap (lowered via the
@@ -1132,18 +927,13 @@ object LayoutQueries {
     * The routing and the zero-rewrite bill are enforced at build
     * time. Built once per dataset behind the usual marker. */
   def ensureSubqueryJoinDeletedManifest(s: SparkSession, d: String)
-      : String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_sqjdel"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-        concat(lit("d"), col("doc_id")).as("key"),
-        col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=sqjdel rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      : String =
+    fixture(s, d, "docs_manifest_sqjdel", "manifest=sqjdel",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"),
+          concat(lit("d"), col("doc_id")).as("key"),
+          col("lang"), col("n_chars"))
       Seq(0L, 1L).foreach { r =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(col("doc_id") % 2 === r), path,
@@ -1181,10 +971,7 @@ object LayoutQueries {
         before.map(e => e.dir -> e.files).toMap,
         "ensureSubqueryJoinDeletedManifest: the join route must " +
           "rewrite zero data files")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table mutated by an OVER-CAP `IN (subquery) AND
     * <residual>` DELETE — the route with residual conjuncts beside
@@ -1196,18 +983,13 @@ object LayoutQueries {
     * exact bug a membership-only route would introduce). Built once
     * per dataset. */
   def ensureSubqueryResidualDeletedManifest(s: SparkSession, d: String)
-      : String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_sqresdel"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-        concat(lit("d"), col("doc_id")).as("key"),
-        col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=sqresdel rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      : String =
+    fixture(s, d, "docs_manifest_sqresdel", "manifest=sqresdel",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"),
+          concat(lit("d"), col("doc_id")).as("key"),
+          col("lang"), col("n_chars"))
       Seq(0L, 1L).foreach { r =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(col("doc_id") % 2 === r), path,
@@ -1252,10 +1034,7 @@ object LayoutQueries {
           col("lang") === "en").count() == 0,
         "ensureSubqueryResidualDeletedManifest: rows matching BOTH " +
           "must be gone")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table mutated by an OVER-CAP `IN (subquery)` UPDATE:
     * the DELETE route's copy-on-write twin ([[ManifestTable
@@ -1263,18 +1042,13 @@ object LayoutQueries {
     * only key-overlapping dirs rewrite, and the routing is enforced
     * at build time via the commit op. Built once per dataset. */
   def ensureSubqueryUpdatedManifest(s: SparkSession, d: String)
-      : String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_squpd"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-        concat(lit("d"), col("doc_id")).as("key"),
-        col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=squpd rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      : String =
+    fixture(s, d, "docs_manifest_squpd", "manifest=squpd",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"),
+          concat(lit("d"), col("doc_id")).as("key"),
+          col("lang"), col("n_chars"))
       Seq(0L, 1L).foreach { r =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(col("doc_id") % 2 === r), path,
@@ -1302,10 +1076,7 @@ object LayoutQueries {
         .exists(_._1 == "updateKeysFrame"),
         "ensureSubqueryUpdatedManifest: the over-cap IN-subquery " +
           "update must route through updateKeysFrame")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table keyed by a COMPOSITE business key — (grp, sub)
     * = (doc_id div 1000, doc_id mod 1000) — upserted through the SQL
@@ -1318,19 +1089,14 @@ object LayoutQueries {
     * dirsHitByKeysMulti). Built once per dataset behind the usual
     * marker. */
   def ensureCompositeKeyMergedManifest(s: SparkSession, d: String)
-      : String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_ckey"
-    val base = Tables.documents(s, d)
-      .select(col("doc_id"),
-        floor(col("doc_id") / 1000).cast("long").as("grp"),
-        pmod(col("doc_id"), lit(1000)).cast("long").as("sub"),
-        col("lang"), col("n_chars"))
-    val n = base.count()
-    val expect = s"layout=$LayoutVersion manifest=ckey rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      : String =
+    fixture(s, d, "docs_manifest_ckey", "manifest=ckey", "documents") { path =>
+      val base = Tables.documents(s, d)
+        .select(col("doc_id"),
+          floor(col("doc_id") / 1000).cast("long").as("grp"),
+          pmod(col("doc_id"), lit(1000)).cast("long").as("sub"),
+          col("lang"), col("n_chars"))
+      val n = base.count()
       val q = math.max(n / 4, 1)
       (0L until 4L).foreach { i =>
         val lo = i * q
@@ -1357,10 +1123,7 @@ object LayoutQueries {
           |ON t.grp = u.grp AND t.sub = u.sub
           |WHEN MATCHED THEN UPDATE SET n_chars = u.n_chars
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A documents-derived manifest table read ACROSS a column rename
     * (ManifestTable.renameColumn — one metadata commit on the
@@ -1370,16 +1133,11 @@ object LayoutQueries {
     * in-place ranged UPDATE straddling both eras proves the staged
     * rewrite works on a mapped table. Built once per dataset behind
     * the usual marker. */
-  def ensureRenamedColumnManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_cmap"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=cmap rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureRenamedColumnManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_cmap", "manifest=cmap", "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       val h = math.max(n / 2, 1)
       graft.sinks.ManifestTable.append(s,
         docs.filter(col("doc_id") < h), path,
@@ -1393,10 +1151,7 @@ object LayoutQueries {
         100L, 199L, Seq("chars" -> (col("chars") + 7)))
       require(graft.sinks.ManifestTable.read(s, path).count() == n,
         "ensureRenamedColumnManifest: rows lost across the rename")
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table whose ENTIRE lifecycle — CREATE, every INSERT,
     * UPDATE, DELETE, and the final read — happens through the
@@ -1411,17 +1166,13 @@ object LayoutQueries {
     s.conf.set("spark.sql.catalog.graftcat",
       "graft.catalog.GraftCatalog")
     s.conf.set("spark.sql.catalog.graftcat.warehouse", wh)
-    val path = s"$wh/db/docs"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=catalog rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(wh)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(wh), true)
+    fixture(s, d, "catalog_wh/db/docs", "manifest=catalog",
+        "documents") { _ =>
+      // the whole warehouse goes: the namespace lives beside the table
+      val whPath = new org.apache.hadoop.fs.Path(wh)
+      whPath.getFileSystem(s.sessionState.newHadoopConf()).delete(whPath, true)
       graft.Sql.registerViews(s, d)
-      val q = math.max(n / 2, 1)
+      val q = math.max(Tables.documents(s, d).count() / 2, 1)
       Seq(
         "CREATE NAMESPACE graftcat.db",
         """CREATE TABLE graftcat.db.docs
@@ -1438,9 +1189,7 @@ object LayoutQueries {
           |WHERE doc_id BETWEEN 50 AND 149""".stripMargin,
         "DELETE FROM graftcat.db.docs WHERE doc_id BETWEEN 300 AND 349"
       ).foreach(s.sql(_).collect())
-      ArtifactCache.stamp(path, expect)
     }
-    path
   }
 
   /** A catalog table maintained ENTIRELY through SQL — DML by name
@@ -1456,21 +1205,14 @@ object LayoutQueries {
     s.conf.set("spark.sql.catalog.graftcat",
       "graft.catalog.GraftCatalog")
     s.conf.set("spark.sql.catalog.graftcat.warehouse", wh)
-    val path = s"$wh/db/maint"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=maintcat rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(wh)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      // scoped delete: ONLY this table's dir + ref (the warehouse is
-      // shared with q153's table)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$wh/db/maint.graftref"),
-        false)
+    fixture(s, d, "catalog_wh/db/maint", "manifest=maintcat",
+        "documents") { path =>
+      // scoped delete: ONLY this table's ref beside its dir (the
+      // warehouse is shared with q153's table)
+      val ref = new org.apache.hadoop.fs.Path(s"$wh/db/maint.graftref")
+      ref.getFileSystem(s.sessionState.newHadoopConf()).delete(ref, false)
       graft.Sql.registerViews(s, d)
-      val q = math.max(n / 4, 1)
+      val q = math.max(Tables.documents(s, d).count() / 4, 1)
       (Seq("CREATE NAMESPACE IF NOT EXISTS graftcat.db",
         """CREATE TABLE graftcat.db.maint
           |(doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -1496,9 +1238,7 @@ object LayoutQueries {
       require(graft.sinks.ManifestTable.entriesOf(s, path, v)
         .forall(_.dv.isEmpty),
         "ensureMaintainedCatalogTable: rewrite_deletes left tombstones")
-      ArtifactCache.stamp(path, expect)
     }
-    path
   }
 
   /** A documents-derived manifest table with a KNOWN mutation
@@ -1507,16 +1247,10 @@ object LayoutQueries {
     * v3), one copy-on-write range DELETE (doc_id 300–349, v4) — the
     * fixture the change-data-feed query reads end-to-end. Built
     * once per dataset behind the usual marker. */
-  def ensureChangeFeedTable(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_cdf"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=cdf rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureChangeFeedTable(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_cdf", "manifest=cdf", "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
       graft.sinks.ManifestTable.append(s,
         docs.filter(col("doc_id") < 250), path,
         statsCols = Seq("doc_id"))
@@ -1527,10 +1261,7 @@ object LayoutQueries {
         100L, 199L, Seq("n_chars" -> (col("n_chars") + 7)))
       graft.sinks.ManifestTable.deleteRange(s, path, "doc_id",
         300L, 349L)
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table guarded by a CHECK constraint: seeded with the
     * first half of documents, `ALTER TABLE ADD CONSTRAINT`-style
@@ -1542,16 +1273,12 @@ object LayoutQueries {
     * violating append is ever admitted — the cached artifact embodies
     * the gate working. Built once per dataset behind the usual
     * marker. */
-  def ensureConstrainedManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_checked"
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=check rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureConstrainedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_checked", "manifest=check",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val n = docs.count()
       val h = math.max(n / 2, 1)
       graft.sinks.ManifestTable.append(s,
         docs.filter(col("doc_id") < h), path,
@@ -1573,10 +1300,7 @@ object LayoutQueries {
         "must leave the table version untouched")
       graft.sinks.ManifestTable.append(s,
         second.filter(pmod(col("doc_id"), lit(7)) =!= 0), path)
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** The Bloom-manifest layout after a MERGE-ON-READ delete cycle
     * ([[graft.sinks.ManifestTable.deleteKeys]]): every doc_id ≡ 3
@@ -1585,15 +1309,9 @@ object LayoutQueries {
     * those keys RE-INSERTED as a fresh commit (the per-dir scoping
     * case: a tombstone must never reach past its own dirs onto later
     * ingest). Built once per dataset behind the usual marker. */
-  def ensureDvManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_dv"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=mod4+dv rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureDvManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_dv", "manifest=mod4+dv", "documents") { path =>
+      val docs = Tables.documents(s, d)
       (0 until 4).foreach { i =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(pmod(col("doc_id"), lit(4)) === i), path,
@@ -1612,10 +1330,7 @@ object LayoutQueries {
       graft.sinks.ManifestTable.append(s,
         docs.filter(pmod(col("doc_id"), lit(7)) === 3 &&
           col("doc_id") < 20), path)
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A manifest table that survived a BAD DEPLOY: two good commits,
     * one corrupting overwrite, one
@@ -1624,15 +1339,11 @@ object LayoutQueries {
     * original dirs — builder-asserted), then one post-rollback append
     * proving the table keeps living. Built once per dataset behind
     * the usual marker. */
-  def ensureRestoredManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_restored"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=restore rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureRestoredManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_restored", "manifest=restore",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
+      val n = docs.count()
       val h = math.max(n / 2, 1)
       graft.sinks.ManifestTable.append(s,
         docs.filter(col("doc_id") < h), path, statsCols = Seq("doc_id"))
@@ -1652,10 +1363,7 @@ object LayoutQueries {
       graft.sinks.ManifestTable.append(s,
         docs.filter(pmod(col("doc_id"), lit(10)) === 0)
           .withColumn("doc_id", col("doc_id") + (1L << 41)), path)
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** Documents ingested ARRIVAL-ORDERED (4 commits by doc_id mod 4 —
     * every commit spans the full id range, so manifest range pruning
@@ -1664,25 +1372,17 @@ object LayoutQueries {
     * dirs: the OPTIMIZE maintenance shape that retrofits prunability
     * onto a table whose ingest order didn't provide it. Built once
     * per dataset behind the usual marker. */
-  def ensureClusteredManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_clustered"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=mod4+cluster4 rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureClusteredManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_clustered", "manifest=mod4+cluster4",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
       (0 until 4).foreach { i =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(pmod(col("doc_id"), lit(4)) === i), path,
           statsCols = Seq("doc_id"))
       }
       graft.sinks.ManifestTable.cluster(s, path, "doc_id", 4)
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** Documents ingested arrival-ordered (4 commits by doc_id mod 4 —
     * both doc_id AND n_chars stats vacuous), then rewritten by
@@ -1693,25 +1393,17 @@ object LayoutQueries {
     * shape for a table with two independent hot filter columns, where
     * single-axis clustering serves only its lead column. Built once
     * per dataset behind the usual marker. */
-  def ensureZClusteredManifest(s: SparkSession, d: String): String = {
-    val path = s"${layoutRoot(d)}/docs_manifest_zclustered"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect = s"layout=$LayoutVersion manifest=mod4+zcluster16 rows=$n"
-    if (!ArtifactCache.hit(path, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def ensureZClusteredManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "docs_manifest_zclustered", "manifest=mod4+zcluster16",
+        "documents") { path =>
+      val docs = Tables.documents(s, d)
       (0 until 4).foreach { i =>
         graft.sinks.ManifestTable.append(s,
           docs.filter(pmod(col("doc_id"), lit(4)) === i), path,
           statsCols = Seq("doc_id", "n_chars"))
       }
       graft.sinks.ManifestTable.clusterZ(s, path, "doc_id", "n_chars", 16)
-      ArtifactCache.stamp(path, expect)
     }
-    path
-  }
 
   /** A curated corpus built INCREMENTALLY with manifest tables as the
     * pipeline's spine (q131): documents land as three ascending-range
@@ -1725,17 +1417,12 @@ object LayoutQueries {
     * which is precisely the contract that lets table maintenance and
     * incremental consumers coexist at 100 TB. Built once per dataset
     * behind the usual marker. */
-  def ensureCuratedManifest(s: SparkSession, d: String): String = {
-    import graft.sinks.ManifestTable
-    val root = s"${layoutRoot(d)}/curated_mf"
-    val docs = Tables.documents(s, d)
-    val n = Tables.memoCount(docs)
-    val expect =
-      s"layout=$LayoutVersion curated=3batches+midcompact rows=$n"
-    if (!ArtifactCache.hit(root, expect)) {
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+  def ensureCuratedManifest(s: SparkSession, d: String): String =
+    fixture(s, d, "curated_mf", "curated=3batches+midcompact",
+        "documents") { root =>
+      import graft.sinks.ManifestTable
+      val docs = Tables.documents(s, d)
+      val n = docs.count()
       val landing = s"$root/landing"
       val curated = s"$root/curated"
       val q = math.max(n / 3, 1)
@@ -1757,10 +1444,7 @@ object LayoutQueries {
         // mid-run maintenance: the drained consumer must not notice
         if (i == 1) ManifestTable.compact(s, landing)
       }
-      ArtifactCache.stamp(root, expect)
     }
-    root
-  }
 
   /** The q113 plan, exposed for the PlanSpec pin (bloom probe inside
     * the scan stage, semi join after). */

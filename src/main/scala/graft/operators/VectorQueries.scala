@@ -650,21 +650,13 @@ object VectorQueries {
   private val Q110_CENTS = 8
   private val Q110_ITERS = 2
 
-  /** Collision-resistant /tmp key for a dataset dir: 16 hex chars of
-    * SHA-256. (32-bit String.hashCode invited a silent cross-dataset
-    * collision: identical knobs + colliding paths would pass the
-    * params-marker check and serve the wrong dataset's artifacts.) */
-  private def datasetKey(d: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+  private def embeddingsFile(d: String) = s"$d/embeddings.parquet"
 
   def q110IndexPath(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft-q110-${datasetKey(d)}/index"
+    s"${graft.Artifacts.dir(d, "q110")}/index"
 
   def q100CodebooksPath(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft-q100-${datasetKey(d)}/codebooks"
+    s"${graft.Artifacts.dir(d, "q100")}/codebooks"
 
   /** Build the q110 IVF-PQ artifacts for dataset `d` unless already
     * present; returns (persisted centroids, whether a build ran). */
@@ -675,8 +667,7 @@ object VectorQueries {
       Q110_M, Q110_K, Q110_CENTS, Q110_ITERS, q110IndexPath(d))
 
   def q117IndexPath(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft-q117-${datasetKey(d)}/index"
+    s"${graft.Artifacts.dir(d, "q117")}/index"
 
   // q170 serving-grade knobs: k-means++ seeding, 4 Lloyd iterations,
   // adaptive multi-probe at slack 0.5 over a minProbe-2 floor — the
@@ -687,30 +678,27 @@ object VectorQueries {
   private[graft] val Q170_MIN_PROBE = 2
 
   def q170IndexPath(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft-q170-${datasetKey(d)}/index"
+    s"${graft.Artifacts.dir(d, "q170")}/index"
 
   /** Build-once serving-grade cosine IVF artifacts (k-means++
     * centroids + bucket-partitioned index) for dataset `d`; returns
-    * (persisted centroids, whether a build ran). Same marker protocol
-    * as [[ensureQ110Index]] ([[graft.vector.ArtifactCache]]). */
+    * (persisted centroids, whether a build ran). Keyed on the
+    * embeddings file through [[graft.Artifacts.ensure]]. */
   def ensureQ170Index(s: SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, Boolean) = {
-    import graft.vector.{AnnVersion, ArtifactCache, VectorIndex}
-    val corpus = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
+    import graft.vector.{AnnVersion, VectorIndex}
     val path = q170IndexPath(d)
-    val expect = s"algo=${AnnVersion.AlgoVersion} serving " +
-      s"cents=$Q170_CENTS iters=$Q170_ITERS rows=${Tables.memoCount(corpus)}"
-    val hit = ArtifactCache.hit(path, expect)
-    if (!hit) {
+    val built = graft.Artifacts.ensure(s, path, Seq(embeddingsFile(d)),
+        s"algo=${AnnVersion.AlgoVersion} serving " +
+          s"cents=$Q170_CENTS iters=$Q170_ITERS") {
+      val corpus = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"))
       val cents = VectorIndex.kmeansPpCentroids(corpus, Q170_CENTS,
         iters = Q170_ITERS).localCheckpoint()
       VectorIndex.build(corpus, cents, path)
       cents.write.mode("overwrite").parquet(s"$path.centroids")
-      ArtifactCache.stamp(path, expect)
     }
-    (s.read.parquet(s"$path.centroids"), !hit)
+    (s.read.parquet(s"$path.centroids"), built)
   }
 
   /** q175's level-1 quantizer knob: 3 super-cells over the 8 q170
@@ -726,93 +714,70 @@ object VectorQueries {
     * re-clustering it on every probe run was paying the k-means
     * build (two Lloyd rounds of jobs) inside the serving path.
     * Deterministic build + exact float/double parquet round-trip make
-    * cached ≡ in-query, the same argument as every other ensure*.
+    * cached ≡ in-query, the same argument as every other ensure*. Its
+    * input is the q170 centroids file, so a q170 rebuild rebuilds it.
     * Returns (superCents, centToSuper, whether a build ran). */
   def ensureQ175Super(s: SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         Boolean) = {
-    import graft.vector.{AnnVersion, ArtifactCache, VectorIndex}
+    import graft.vector.{AnnVersion, VectorIndex}
     val (cents, _) = ensureQ170Index(s, d)
-    val path = q170IndexPath(d)
-    val superPath = s"$path.super$Q175_SUPERS"
-    val corpus = Tables.embeddings(s, d).select(col("vec_id"))
-    val expect = s"algo=${AnnVersion.AlgoVersion} serving " +
-      s"cents=$Q170_CENTS iters=$Q170_ITERS rows=${Tables.memoCount(corpus)} " +
-      s"supers=$Q175_SUPERS"
-    val hit = ArtifactCache.hit(superPath, expect)
-    if (!hit) {
+    val superPath = s"${q170IndexPath(d)}.super$Q175_SUPERS"
+    val built = graft.Artifacts.ensure(s, superPath,
+        Seq(s"${q170IndexPath(d)}.centroids"),
+        s"algo=${AnnVersion.AlgoVersion} supers=$Q175_SUPERS") {
       val (sc, mapping) = VectorIndex.superCentroids(cents, Q175_SUPERS)
-      sc.write.mode("overwrite").parquet(superPath)
+      sc.write.parquet(superPath)
       mapping.write.mode("overwrite").parquet(s"$superPath.map")
-      ArtifactCache.stamp(superPath, expect)
     }
-    (s.read.parquet(superPath), s.read.parquet(s"$superPath.map"), !hit)
+    (s.read.parquet(superPath), s.read.parquet(s"$superPath.map"), built)
   }
 
-  /** q117's base/delta split of the embeddings corpus: the 80% the
-    * index is BUILT on vs the 20% APPENDED afterwards. Every query id
-    * (vec_id % 100 == 0) lands in the delta, so the probe exercises
-    * appended rows by construction. */
-  private def q117Split(s: SparkSession, d: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val corpus = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-    (corpus.filter(col("vec_id") % 5 =!= 0),
-      corpus.filter(col("vec_id") % 5 === 0))
-  }
-
-  /** Build-once q117 artifacts: IVF-PQ index over the base 80%
-    * (q110's knobs), then the 20% delta appended exactly once under
-    * [[graft.vector.IvfPq.ensureAppended]]'s marker protocol; returns
-    * (persisted centroids, whether any build/append work ran). */
+  /** Build-once q117 artifacts, one recipe: IVF-PQ index over the base
+    * 80% of the embeddings (q110's knobs), then the 20% delta appended
+    * ([[graft.vector.IvfPq.append]]). Every query id (vec_id % 100 ==
+    * 0) lands in the delta, so the probe exercises appended rows by
+    * construction. Returns (persisted centroids, whether a build ran). */
   def ensureQ117Index(s: SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, Boolean) = {
-    import graft.vector.IvfPq
-    val (base, delta) = q117Split(s, d)
+    import graft.vector.{IvfPq, VectorIndex}
     val path = q117IndexPath(d)
-    val baseExpect = IvfPq.expectOf(Q110_M, Q110_K, Q110_CENTS,
-      Q110_ITERS, Tables.memoCount(base))
-    // build-once on base unless the append already completed (the
-    // post-append marker no longer matches the base expect by design)
-    val built =
-      if (graft.vector.ArtifactCache.hit(path,
-          s"$baseExpect appended=${Tables.memoCount(delta)}")) false
-      else IvfPq.ensureBuilt(s, base, Q110_M, Q110_K, Q110_CENTS,
-        Q110_ITERS, path)._2
-    val appended = IvfPq.ensureAppended(s, path, delta, baseExpect)
-    (IvfPq.centroidsOf(s, path), built || appended)
+    val built = graft.Artifacts.ensure(s, path, Seq(embeddingsFile(d)),
+        IvfPq.recipeOf(Q110_M, Q110_K, Q110_CENTS, Q110_ITERS) +
+          " base=vec_id%5!=0 appended=vec_id%5=0") {
+      val corpus = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"))
+      val base = corpus.filter(col("vec_id") % 5 =!= 0)
+      IvfPq.build(base, VectorIndex.kmeansCentroids(base, Q110_CENTS,
+        iters = Q110_ITERS).localCheckpoint(), Q110_M, Q110_K, path)
+      IvfPq.append(s, path, corpus.filter(col("vec_id") % 5 === 0))
+    }
+    (IvfPq.centroidsOf(s, path), built)
   }
 
   def q173IndexPath(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft-q173-${datasetKey(d)}/index"
+    s"${graft.Artifacts.dir(d, "q173")}/index"
 
-  /** Build-once q173 artifacts: the full-corpus IVF-PQ index (q110's
-    * knobs) at a DEDICATED path, with every `vec_id % 10 == 3` key
-    * then DELETED through the index-side tombstone
-    * ([[graft.vector.IvfPq.delete]]) — exactly once, under the same
-    * marker protocol as [[graft.vector.IvfPq.ensureAppended]] (the
-    * post-delete marker no longer matches the base expect, so a
-    * re-run skips and a crash between build and stamp re-deletes
-    * idempotently). Returns (persisted centroids, whether work ran). */
+  /** Build-once q173 artifacts, one recipe: the full-corpus IVF-PQ
+    * index (q110's knobs) at a DEDICATED path, with every
+    * `vec_id % 10 == 3` key then DELETED through the index-side
+    * tombstone ([[graft.vector.IvfPq.delete]]). Returns (persisted
+    * centroids, whether a build ran). */
   def ensureQ173Index(s: SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, Boolean) = {
-    import graft.vector.{ArtifactCache, IvfPq}
-    val corpus = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
+    import graft.vector.{IvfPq, VectorIndex}
     val path = q173IndexPath(d)
-    val dead = corpus.filter(col("vec_id") % 10 === 3).select("vec_id")
-    val after = s"${IvfPq.expectOf(Q110_M, Q110_K, Q110_CENTS,
-      Q110_ITERS, Tables.memoCount(corpus))} deleted=${Tables.memoCount(dead)}"
-    if (ArtifactCache.hit(path, after))
-      (IvfPq.centroidsOf(s, path), false)
-    else {
-      IvfPq.ensureBuilt(s, corpus, Q110_M, Q110_K, Q110_CENTS,
-        Q110_ITERS, path)
-      IvfPq.delete(s, path, dead)
-      ArtifactCache.stamp(path, after)
-      (IvfPq.centroidsOf(s, path), true)
+    val built = graft.Artifacts.ensure(s, path, Seq(embeddingsFile(d)),
+        IvfPq.recipeOf(Q110_M, Q110_K, Q110_CENTS, Q110_ITERS) +
+          " deleted=vec_id%10=3") {
+      val corpus = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"))
+      IvfPq.build(corpus, VectorIndex.kmeansCentroids(corpus, Q110_CENTS,
+        iters = Q110_ITERS).localCheckpoint(), Q110_M, Q110_K, path)
+      IvfPq.delete(s, path,
+        corpus.filter(col("vec_id") % 10 === 3).select("vec_id"))
     }
+    (IvfPq.centroidsOf(s, path), built)
   }
 
   /** Train-once q100 PQ codebooks for dataset `d` (amortized offline
@@ -894,8 +859,15 @@ object VectorQueries {
        |FROM q LEFT JOIN o USING (query_id)
        |ORDER BY query_id""".stripMargin
 
-  /** sf0.01 retrieved ids of the two deterministic ANN indexes
-    * (`graft.Dev pins` regenerates both lists). */
+  /** The seven `PINS_*` lists (q100, q110, q117, q170, q171, q173,
+    * q175) are sf0.01 regression pins: the (query_id, vec_id) pairs each
+    * deterministic ANN path retrieved from sf0.01 when the list was
+    * taken. The oracle SQL joins them against DuckDB's exact top-10, so
+    * those checks judge sf0.01 only, and no other input. `graft.Dev
+    * pins <sf0.01 dir>` fresh-builds the indexes and regenerates every
+    * list; the lists move together with
+    * [[graft.vector.AnnVersion.AlgoVersion]], so an algorithm change
+    * bumps the version and regenerates the pins in the same commit. */
   private def PINS_Q100: String =
     "(0,0),(0,190),(0,323),(0,334),(0,365),(0,387),(0,388),(0,423)," +
     "(0,464),(0,483),(100,24),(100,45),(100,100),(100,202)," +

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
 /** Version of the persisted ANN index algorithms (coarse IVF
   * assignment, PQ codebook training/encode, probe staging). Bump on
   * ANY behavioral edit to [[PQ]]/[[IvfPq]]/[[VectorIndex]]: the
-  * constant is folded into every persisted-artifact cache marker
+  * constant is folded into every persisted-artifact recipe
   * ([[IvfPq.ensureBuilt]], [[PQ.ensureCodebooks]]), so artifacts built
   * by a previous algorithm miss the marker check and rebuild instead
   * of being served silently. `graft.Dev pins` prints it beside the
@@ -55,24 +55,6 @@ object AnnVersion {
   //     `gen` column, probes mask tombstoned rows) + k-means++ seed
   //     draw can no longer duplicate a seed on FP rounding
   val AlgoVersion = 4
-}
-
-/** Shared marker protocol for build-once persisted artifacts: a
-  * `.params` file written AFTER a completed build holds the exact
-  * parameter string the artifacts were built under (algorithm version,
-  * knobs, corpus fingerprint). Reuse requires an exact match; an
-  * interrupted build (no marker) or ANY drift rebuilds. */
-private[graft] object ArtifactCache {
-  def hit(path: String, expect: String): Boolean = {
-    val marker = new java.io.File(s"$path.params")
-    marker.exists() && {
-      val src = scala.io.Source.fromFile(marker)
-      try src.mkString == expect finally src.close()
-    }
-  }
-  def stamp(path: String, expect: String): Unit =
-    java.nio.file.Files.writeString(
-      new java.io.File(s"$path.params").toPath, expect)
 }
 
 object IvfPq {
@@ -292,24 +274,29 @@ object IvfPq {
     * index: appends `delta` exactly once per completed base build.
     * `baseExpect` is the marker [[ensureBuilt]] stamped (returned by
     * [[expectOf]] for the base corpus); after the append the marker
-    * becomes `"$baseExpect appended=N"`, so a re-run skips (returns
-    * false), a later [[ensureBuilt]] against the BASE corpus misses
-    * and rebuilds base-only, and an algorithm bump invalidates
-    * everything through [[AnnVersion.AlgoVersion]] as usual. A marker
-    * matching neither state fails loudly — appending onto an unknown
-    * artifact would corrupt it silently. One append generation per
-    * build by design: continuous multi-delta ingest uses the raw
-    * [[append]] under its own ingest checkpoint. */
+    * becomes `baseExpect` plus the delta's fingerprint, so a re-run
+    * skips (returns false), a later [[ensureBuilt]] against the BASE
+    * corpus misses and rebuilds base-only, and an algorithm bump
+    * invalidates everything through [[AnnVersion.AlgoVersion]] as usual.
+    * A marker matching neither state fails loudly — appending onto an
+    * unknown artifact would corrupt it silently. The marker is dropped
+    * before the append, so a crash mid-append leaves an index no ensure
+    * call reuses. This extends an artifact in place, so it uses the
+    * [[graft.Artifacts]] marker primitives rather than `ensure`, which
+    * wipes before building. One append generation per build by design:
+    * continuous multi-delta ingest uses the raw [[append]] under its own
+    * ingest checkpoint. */
   def ensureAppended(spark: SparkSession, path: String,
       delta: DataFrame, baseExpect: String): Boolean = {
-    val after = s"$baseExpect appended=${graft.Tables.memoCount(delta)}"
-    if (ArtifactCache.hit(path, after)) false
+    val after = graft.Artifacts.key(delta, s"$baseExpect appended")
+    if (graft.Artifacts.hit(spark, path, after)) false
     else {
-      require(ArtifactCache.hit(path, baseExpect),
+      require(graft.Artifacts.hit(spark, path, baseExpect),
         s"no completed base build at $path for marker '$baseExpect' — " +
           "run ensureBuilt on the base corpus first")
+      graft.Artifacts.clear(spark, path)
       append(spark, path, delta)
-      ArtifactCache.stamp(path, after)
+      graft.Artifacts.stamp(spark, path, after)
       true
     }
   }
@@ -435,19 +422,22 @@ object IvfPq {
     * [[driftReport]] recommends: re-train both quantizers (k-means++
     * coarse + fresh PQ codebooks) over everything currently served
     * (tombstoned rows excluded — a rebuild is also when deletes
-    * physically leave), overwrite the artifact set, and stamp the
-    * [[ensureBuilt]] marker so later ensure calls at these params
-    * reuse it. Returns (rows rebuilt over, cells). */
+    * physically leave) and overwrite the artifact set. The corpus is
+    * the index's own checkpointed rows, which have no input files, so
+    * the rebuilt index carries no reusable marker: a later
+    * [[ensureBuilt]] builds from its own corpus. Returns (rows rebuilt
+    * over, cells). */
   def rebuild(spark: SparkSession, path: String, m: Int, k: Int,
       nCentroids: Int, kmIters: Int = 4): (Long, Long) = {
     val corpus = live(spark, path)
       .select(col("vec_id"), col("embedding")).localCheckpoint()
     val rows = corpus.count()
     require(rows > 0, s"IvfPq.rebuild: no live rows at $path")
-    val cents = VectorIndex.kmeansPpCentroids(corpus, nCentroids,
-      iters = kmIters).localCheckpoint()
-    build(corpus, cents, m, k, path)
-    ArtifactCache.stamp(path, expectOf(m, k, nCentroids, kmIters, rows))
+    graft.Artifacts.ensure(spark, path, corpus,
+        recipeOf(m, k, nCentroids, kmIters)) {
+      build(corpus, VectorIndex.kmeansPpCentroids(corpus, nCentroids,
+        iters = kmIters).localCheckpoint(), m, k, path)
+    }
     (rows, nCentroids.toLong)
   }
 
@@ -456,39 +446,37 @@ object IvfPq {
   def centroidsOf(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(centroidsPath(path))
 
-  /** The [[ensureBuilt]] cache-marker string for these build params —
-    * exposed so append-aware callers can name the base-build state
-    * ([[ensureAppended]]) without duplicating the format. */
-  def expectOf(m: Int, k: Int, nCentroids: Int, kmIters: Int,
-      rows: Long): String =
+  /** The build knobs of an [[ensureBuilt]] index, as its recipe. */
+  private[graft] def recipeOf(m: Int, k: Int, nCentroids: Int,
+      kmIters: Int): String =
     s"algo=${AnnVersion.AlgoVersion} m=$m k=$k " +
-      s"cents=$nCentroids iters=$kmIters rows=$rows"
+      s"cents=$nCentroids iters=$kmIters"
+
+  /** The marker [[ensureBuilt]] writes for `corpus` under these build
+    * params — exposed so append-aware callers can name the base-build
+    * state ([[ensureAppended]]) without duplicating the format. */
+  def expectOf(corpus: DataFrame, m: Int, k: Int, nCentroids: Int,
+      kmIters: Int): String =
+    graft.Artifacts.key(corpus, recipeOf(m, k, nCentroids, kmIters))
 
   /** Build-once wrapper for the serving path: (re)builds the full
-    * artifact set (index + codebooks + centroids) at `path` unless a
-    * param-marker from a completed identical build is present, and
-    * returns the PERSISTED centroids plus whether a build ran. The
-    * marker is written LAST, so an interrupted build rebuilds. The
-    * index is deterministic per (dataset, params) — spec-pinned
-    * bit-identical rebuilds — which is what makes reuse sound. The
-    * marker folds in [[AnnVersion.AlgoVersion]] (an algorithm edit
-    * invalidates every cached artifact — no manual /tmp hygiene) and
-    * the corpus row count (a regenerated/regrown dataset at the same
-    * path invalidates too; the count is a parquet metadata-only job,
-    * the one corpus evaluation a cache hit pays). */
+    * artifact set (index + codebooks + centroids) at `path` unless the
+    * [[graft.Artifacts]] marker of a completed build from the same
+    * corpus files, plan and params is present, and returns the
+    * PERSISTED centroids plus whether a build ran. The index is
+    * deterministic per (dataset, params) — spec-pinned bit-identical
+    * rebuilds — which is what makes reuse sound. The marker folds in
+    * [[AnnVersion.AlgoVersion]], so an algorithm edit invalidates every
+    * cached artifact. */
   def ensureBuilt(spark: SparkSession, corpus: DataFrame, m: Int,
       k: Int, nCentroids: Int, kmIters: Int, path: String)
       : (DataFrame, Boolean) = {
-    val expect = expectOf(m, k, nCentroids, kmIters,
-      graft.Tables.memoCount(corpus))
-    val hit = ArtifactCache.hit(path, expect)
-    if (!hit) {
-      val cents = VectorIndex.kmeansCentroids(corpus, nCentroids,
-        iters = kmIters).localCheckpoint()
-      build(corpus, cents, m, k, path)
-      ArtifactCache.stamp(path, expect)
+    val built = graft.Artifacts.ensure(spark, path, corpus,
+        recipeOf(m, k, nCentroids, kmIters)) {
+      build(corpus, VectorIndex.kmeansCentroids(corpus, nCentroids,
+        iters = kmIters).localCheckpoint(), m, k, path)
     }
-    (spark.read.parquet(centroidsPath(path)), !hit)
+    (spark.read.parquet(centroidsPath(path)), built)
   }
 
   /** Probe: top-k exact-re-ranked neighbors per (query_id, q_emb)
@@ -609,7 +597,17 @@ object IvfPq {
   }
 
   /** Stages 2-3 over an already-picked (query_id, q_emb, cent_id
-    * [, ...]) bucket frame. */
+    * [, ...]) bucket frame.
+    *
+    * Query-batch bound: the picks are collected and the ADC distance
+    * tables are computed on the driver, single-threaded. The tables
+    * hold queries x m x k doubles (8 bytes each raw, a few times that
+    * boxed in Rows), the picks hold queries x probed buckets x dim
+    * floats, and the compute is queries x k x dim float operations. At
+    * q110's m = 8, k = 16 a 10,000-query batch is 1.28 M doubles
+    * (about 10 MB raw). Keep queries x m x k below about 10^7 per call
+    * (about 80 MB raw; at k = 256 that is about 5,000 queries with
+    * m = 8) and split larger batches across calls. */
   private def probeFrom(spark: SparkSession, path: String,
       picked: DataFrame, m: Int, topK: Int,
       shortlist: Int, allowed: Option[DataFrame]): DataFrame = {

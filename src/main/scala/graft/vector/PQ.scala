@@ -149,25 +149,21 @@ object PQ {
 
   /** Build-once wrapper for the codebooks alone — the [[IvfPq
     * .ensureBuilt]] contract applied to the plain-PQ serving path
-    * (q100's shape): train + persist at `path` unless a marker from a
-    * completed identical build exists, return the persisted codebooks
-    * plus whether training ran. Codebooks are deterministic
-    * bit-identical per (dataset, params) and floats round-trip parquet
-    * exactly, so a cached read scores identically to an in-query
-    * train. The marker folds in [[AnnVersion.AlgoVersion]] and the
-    * corpus row count — same staleness guarantees as the full index. */
+    * (q100's shape): train + persist at `path` unless the
+    * [[graft.Artifacts]] marker of a completed build from the same
+    * corpus and params exists, return the persisted codebooks plus
+    * whether training ran. Codebooks are deterministic bit-identical
+    * per (dataset, params) and floats round-trip parquet exactly, so a
+    * cached read scores identically to an in-query train. The recipe
+    * folds in [[AnnVersion.AlgoVersion]]. */
   def ensureCodebooks(spark: org.apache.spark.sql.SparkSession,
       corpus: DataFrame, m: Int, k: Int, iters: Int, path: String)
       : (DataFrame, Boolean) = {
-    val expect = s"algo=${AnnVersion.AlgoVersion} m=$m k=$k " +
-      s"iters=$iters rows=${graft.Tables.memoCount(corpus)}"
-    val hit = ArtifactCache.hit(path, expect)
-    if (!hit) {
-      trainCodebooks(corpus, m, k, iters).write.mode("overwrite")
-        .parquet(path)
-      ArtifactCache.stamp(path, expect)
+    val built = graft.Artifacts.ensure(spark, path, corpus,
+        s"algo=${AnnVersion.AlgoVersion} m=$m k=$k iters=$iters") {
+      trainCodebooks(corpus, m, k, iters).write.parquet(path)
     }
-    (spark.read.parquet(path), !hit)
+    (spark.read.parquet(path), built)
   }
 
   /** Encode the corpus: (vec_id, codes array<int> of length m). */

@@ -361,7 +361,7 @@ class IvfPqSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-ivfpq-ensure-app").toString
     val (base, delta) = baseDelta
     val path = s"$tmp/index"
-    val baseExpect = IvfPq.expectOf(M, 16, 4, 2, base.count())
+    val baseExpect = IvfPq.expectOf(base, M, 16, 4, 2)
     // no base build yet: appending onto nothing must fail loudly
     assertThrows[IllegalArgumentException] {
       IvfPq.ensureAppended(spark, path, delta, baseExpect)
@@ -388,7 +388,7 @@ class IvfPqSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-ivfpq-compact").toString
     val (base, delta) = baseDelta
     val path = s"$tmp/index"
-    val expect = IvfPq.expectOf(M, 16, 4, 2, base.count())
+    val expect = IvfPq.expectOf(base, M, 16, 4, 2)
     IvfPq.ensureBuilt(spark, base, m = M, k = 16, nCentroids = 4,
       kmIters = 2, path)
     // two raw appends — the continuous-ingest shape that fragments
@@ -427,7 +427,7 @@ class IvfPqSpec extends AnyFunSuite {
     assert(probe() == probeBefore)
     // layout maintenance never touches the reuse contract: the marker
     // still names the completed base build
-    assert(graft.vector.ArtifactCache.hit(path, expect))
+    assert(graft.Artifacts.hit(spark, path, expect))
     // and the swap left no residue
     assert(!new java.io.File(s"$path.compacting").exists())
     assert(!new java.io.File(s"$path.precompact").exists())
