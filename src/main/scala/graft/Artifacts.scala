@@ -141,10 +141,11 @@ object Artifacts {
     * dataset dir `d`: one per (kind, dataset path), so a regenerated
     * dataset overwrites its artifacts in place. */
   def dir(d: String, kind: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-$kind-${locationKey(d)}"
+    s"${System.getProperty("java.io.tmpdir")}/graft-$kind-${shortKey(d)}"
 
-  /** 16 hex chars of SHA-256 of a dataset path. */
-  private[graft] def locationKey(d: String): String = sha(d, 8)
+  /** 16 hex chars of SHA-256 of `s` (a dataset path, a [[key]]): an
+    * identifier-safe name part. */
+  private[graft] def shortKey(s: String): String = sha(s, 8)
 
   private def sha(s: String, bytes: Int): String =
     java.security.MessageDigest.getInstance("SHA-256")

@@ -73,14 +73,19 @@ object LayoutQueries {
     * under /tmp): recurring custkey joins then plan as sort-merge with
     * NO exchange on either side. Both sides MUST share the count (a
     * mismatch reintroduces the shuffle); the table/path names carry it
-    * so differently-bucketed layouts of one dataset coexist. The
-    * catalog entry is per-session (in-memory catalog), so a fresh JVM
-    * re-registers by rewriting — cheap at test scale; in production
-    * the table lives in a persistent metastore and is written once. */
+    * so differently-bucketed layouts of one dataset coexist. The names
+    * also carry a [[graft.Artifacts.key]] of both input tables' files,
+    * so a rewrite of orders or customer, within one session too, names
+    * (and writes) a fresh pair. The catalog entry is per-session
+    * (in-memory catalog), so a fresh JVM re-registers by rewriting —
+    * cheap at test scale; in production the table lives in a
+    * persistent metastore and is written once. */
   def ensureBucketedPair(s: SparkSession, d: String,
       buckets: Int = 0): (String, String) = {
     val b = if (buckets > 0) buckets else bucketCountFor(s, d)
-    val key = s"${b}_${graft.Artifacts.locationKey(d)}"
+    val key = s"${b}_" + graft.Artifacts.shortKey(graft.Artifacts.key(s,
+      Seq(s"$d/orders.parquet", s"$d/customer.parquet"),
+      s"layout=$LayoutVersion buckets=$b"))
     val ordersTbl = s"graft_orders_bk_$key"
     val custTbl = s"graft_customer_bk_$key"
     if (!s.catalog.tableExists(ordersTbl))

@@ -696,9 +696,8 @@ object VectorQueries {
       val cents = VectorIndex.kmeansPpCentroids(corpus, Q170_CENTS,
         iters = Q170_ITERS).localCheckpoint()
       VectorIndex.build(corpus, cents, path)
-      cents.write.mode("overwrite").parquet(s"$path.centroids")
     }
-    (s.read.parquet(s"$path.centroids"), built)
+    (VectorIndex.centroidsOf(s, path), built)
   }
 
   /** q175's level-1 quantizer knob: 3 super-cells over the 8 q170
@@ -715,7 +714,8 @@ object VectorQueries {
     * build (two Lloyd rounds of jobs) inside the serving path.
     * Deterministic build + exact float/double parquet round-trip make
     * cached ≡ in-query, the same argument as every other ensure*. Its
-    * input is the q170 centroids file, so a q170 rebuild rebuilds it.
+    * input is the persisted q170 centroids frame (keyed on its files),
+    * so a q170 rebuild rebuilds it.
     * Returns (superCents, centToSuper, whether a build ran). */
   def ensureQ175Super(s: SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
@@ -723,8 +723,7 @@ object VectorQueries {
     import graft.vector.{AnnVersion, VectorIndex}
     val (cents, _) = ensureQ170Index(s, d)
     val superPath = s"${q170IndexPath(d)}.super$Q175_SUPERS"
-    val built = graft.Artifacts.ensure(s, superPath,
-        Seq(s"${q170IndexPath(d)}.centroids"),
+    val built = graft.Artifacts.ensure(s, superPath, cents,
         s"algo=${AnnVersion.AlgoVersion} supers=$Q175_SUPERS") {
       val (sc, mapping) = VectorIndex.superCentroids(cents, Q175_SUPERS)
       sc.write.parquet(superPath)

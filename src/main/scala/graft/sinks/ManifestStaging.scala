@@ -1530,7 +1530,6 @@ private[sinks] trait ManifestStagingOps { self: ManifestTable.type =>
       s"ManifestTable.mergeToBranch: source carries duplicate " +
         s"'$keyCol' values (e.g. ${dupKeys.headOption.map(_.get(0))}) " +
         "— an upsert needs one row per key")
-    val src = broadcast(source)
     // which source keys exist in the STAGED content vs only the BASE
     val bd = branchDir(path, name)
     require(fs.exists(new org.apache.hadoop.fs.Path(bd)),
@@ -1545,8 +1544,11 @@ private[sinks] trait ManifestStagingOps { self: ManifestTable.type =>
         es.map(e => s"$path/data/${e.dir}"): _*).select(col(keyCol)))
     }.reduceOption(_ unionByName _)
       .getOrElse(source.select(col(keyCol)).limit(0))
-    val inStaged = src.join(stagedKeys, Seq(keyCol), "left_semi")
-    val notStaged = src.join(stagedKeys, Seq(keyCol), "left_anti")
+    // no broadcast hint on `source`: it is the streamed (left) side of
+    // these semi/anti joins, which Spark cannot build, so a hint there
+    // is dropped with a HintErrorLogger warning
+    val inStaged = source.join(stagedKeys, Seq(keyCol), "left_semi")
+    val notStaged = source.join(stagedKeys, Seq(keyCol), "left_anti")
     val baseOnly = notStaged.join(
       readVersion(spark, path, base).select(col(keyCol)),
       Seq(keyCol), "left_semi").limit(1).collect()
@@ -1595,7 +1597,7 @@ private[sinks] trait ManifestStagingOps { self: ManifestTable.type =>
           },
           schema => { df =>
             val srcCols = source.columns.toSet
-            val renamed = src.columns.foldLeft(src)((d, c) =>
+            val renamed = source.columns.foldLeft(source)((d, c) =>
               d.withColumnRenamed(c, s"_graft_m_$c"))
             val joined = df.join(broadcast(renamed),
               df(keyCol) === renamed(s"_graft_m_$keyCol"), "left")

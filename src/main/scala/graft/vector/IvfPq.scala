@@ -30,7 +30,8 @@ import org.apache.spark.sql.functions._
   *     COLUMN-PRUNES to (bucket, vec_id, codes), never reading the
   *     raw vectors (the ~128x I/O reduction PQ exists for); m table
   *     lookups per candidate against per-query distance tables staged
-  *     once ([[PQ.distanceTables]]) -> `shortlist` candidates/query;
+  *     once on the driver ([[PQ.adcTables]]) -> `shortlist`
+  *     candidates/query;
   *  3. exact: squared-L2 re-rank — the (queries x shortlist)-sized id
   *     set broadcasts back against the SAME pruned partitions, so raw
   *     embeddings are read only for shortlisted rows and the index
@@ -60,8 +61,6 @@ object AnnVersion {
 object IvfPq {
 
   private def codebooksPath(path: String) = s"$path.codebooks"
-  private def centroidsPath(path: String) = s"$path.centroids"
-  private def tombstonesPath(path: String) = s"$path.tombstones"
 
   // ---- DELETE PROPAGATION: generation-ordered keyed tombstones.
   //
@@ -92,42 +91,12 @@ object IvfPq {
   // (dead rows physically dropped, tombstone set cleared), so the
   // mask stays broadcast-sized under any delete volume. ----
 
-  private def tombstonesOf(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(tombstonesPath(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  private def clearTombstones(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(tombstonesPath(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
-    ()
-  }
-
-  /** Mask tombstoned rows out of an index frame: a row dies when a
-    * tombstone names its key with a cut above its generation. The
-    * tombstone set broadcasts (it is bounded by deletes since the
-    * last [[compact]], never by index size); with no tombstones the
-    * frame passes through with ZERO plan overhead — the steady-state
-    * read path is unchanged. */
-  private def dropTombstoned(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame =
-    tombstonesOf(spark, path).fold(df) { t =>
-      df.join(
-        broadcast(t.select(col("vec_id").as("_t_vid"),
-          col("cut").as("_t_cut"))),
-        df("vec_id") === col("_t_vid") && df("gen") < col("_t_cut"),
-        "left_anti")
-    }
-
   /** The LIVE index at `path`: tombstone-masked rows. What every
     * consumer that treats the index as the source of truth must read
     * (the streaming sink's duplicate-id anti-join — a deleted key
     * must be re-insertable). */
   def live(spark: SparkSession, path: String): DataFrame =
-    dropTombstoned(spark, path, spark.read.parquet(path))
+    Ivf.dropTombstoned(spark, path, spark.read.parquet(path))
 
   /** DELETE `keys` ((vec_id) frame) from the persisted index: one
     * tombstone write, zero index files touched — the GDPR/retention
@@ -141,11 +110,7 @@ object IvfPq {
       .agg(max(col("gen"))).head()
     val cut = (if (maxGenRow.isNullAt(0)) 0L
       else maxGenRow.getLong(0)) + 1L
-    keys.select(col("vec_id")).filter(col("vec_id").isNotNull)
-      .distinct()
-      .withColumn("cut", lit(cut))
-      .repartition(1)
-      .write.mode("append").parquet(tombstonesPath(path))
+    Ivf.tombstone(path, keys, Some(cut))
     cut
   }
 
@@ -202,11 +167,11 @@ object IvfPq {
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
     // a rebuild starts a fresh generation space — tombstones from the
     // overwritten index would wrongly mask freshly built rows
-    clearTombstones(corpus.sparkSession, path)
+    Ivf.clearTombstones(corpus.sparkSession, path)
     cb.write.mode("overwrite").parquet(codebooksPath(path))
     // centroids persist with the index: a PROBE-only consumer (the
     // serving path) must not need the build-time k-means rerun
-    cents.write.mode("overwrite").parquet(centroidsPath(path))
+    cents.write.mode("overwrite").parquet(Ivf.centroidsPath(path))
   }
 
   /** Incrementally extend a persisted index with `delta` rows
@@ -237,7 +202,7 @@ object IvfPq {
   def append(spark: SparkSession, path: String, delta: DataFrame)
       : Unit = {
     val cb = spark.read.parquet(codebooksPath(path)).localCheckpoint()
-    val cents = spark.read.parquet(centroidsPath(path))
+    val cents = centroidsOf(spark, path)
     // m is a property of the persisted codebooks, not a knob the
     // caller can get wrong: (sub, cid, c_sub) holds m distinct subs
     val mRow = cb.agg(max(col("sub"))).head()
@@ -251,7 +216,7 @@ object IvfPq {
     // from build-time rows (gen 0) — [[driftReport]]'s appended-era
     // signal — without disturbing the ordering: tombstone cuts are
     // always maxRowGen + 1, strictly above any stamped gen.
-    val gen = math.max(tombstonesOf(spark, path)
+    val gen = math.max(Ivf.tombstonesOf(spark, path)
       .map { t =>
         val r = t.agg(max(col("cut"))).head()
         if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -338,7 +303,7 @@ object IvfPq {
     // clear AFTER the swap: a crash between leaves stale tombstones
     // that mask nothing (their dead rows are gone; survivors sit at
     // gen >= cut or under other keys) — harmless, cleared next time
-    clearTombstones(spark, path)
+    Ivf.clearTombstones(spark, path)
   }
 
   /** Quantizer-DRIFT report for a persisted index — the "WHEN do I
@@ -444,7 +409,7 @@ object IvfPq {
   /** The persisted centroids of an index at `path` — the probe-side
     * artifact read, for consumers that manage the build themselves. */
   def centroidsOf(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(centroidsPath(path))
+    spark.read.parquet(Ivf.centroidsPath(path))
 
   /** The build knobs of an [[ensureBuilt]] index, as its recipe. */
   private[graft] def recipeOf(m: Int, k: Int, nCentroids: Int,
@@ -476,7 +441,7 @@ object IvfPq {
       build(corpus, VectorIndex.kmeansCentroids(corpus, nCentroids,
         iters = kmIters).localCheckpoint(), m, k, path)
     }
-    (spark.read.parquet(centroidsPath(path)), built)
+    (centroidsOf(spark, path), built)
   }
 
   /** Probe: top-k exact-re-ranked neighbors per (query_id, q_emb)
@@ -499,9 +464,8 @@ object IvfPq {
   def probe(spark: SparkSession, path: String, cents: DataFrame,
       queries: DataFrame, m: Int, topK: Int, nProbe: Int,
       shortlist: Int, allowed: Option[DataFrame] = None): DataFrame =
-    probeFrom(spark, path,
-      coarseRanks(cents, queries).filter(col("rk") <= nProbe),
-      m, topK, shortlist, allowed)
+    probeAdaptive(spark, path, cents, queries, m, topK, shortlist,
+      minProbe = nProbe, maxProbe = nProbe, allowed = allowed)
 
   /** [[probe]] with the coarse budget derived PER QUERY from the
     * centroid distances (see [[VectorIndex.probeAdaptive]] — this is
@@ -516,15 +480,9 @@ object IvfPq {
       queries: DataFrame, m: Int, topK: Int, shortlist: Int,
       slack: Double = 0.5, minProbe: Int = 2,
       maxProbe: Int = Int.MaxValue,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    val wBest = Window.partitionBy(col("query_id"))
-    val picked = coarseRanks(cents, queries)
-      .withColumn("best", min(col("d2")).over(wBest))
-      .filter(col("rk") <= lit(minProbe) ||
-        (col("rk") <= lit(maxProbe) &&
-          col("d2") <= (lit(1.0) + lit(slack)) * col("best")))
-    probeFrom(spark, path, picked, m, topK, shortlist, allowed)
-  }
+      allowed: Option[DataFrame] = None): DataFrame =
+    adcTopK(spark, path, Ivf.coarse(Ivf.L2, cents, queries,
+      Ivf.Budget(slack, minProbe, maxProbe)), m, topK, shortlist, allowed)
 
   /** TWO-LEVEL [[probeAdaptive]] — [[VectorIndex.probeAdaptive2]]'s
     * L2 twin for the compressed-domain serving config, where the
@@ -551,53 +509,15 @@ object IvfPq {
       maxProbe: Int = Int.MaxValue,
       l1Slack: Double = 1.0, l1MinProbe: Int = 2,
       l1MaxProbe: Int = Int.MaxValue,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    val wq1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2"), col("super_id"))
-    val wBest1 = Window.partitionBy(col("query_id"))
-    val admitted = queries.crossJoin(broadcast(superCents))
-      .select(col("query_id"), col("q_emb"),
-        col("cent_id").as("super_id"),
-        PQ.l2sq(col("q_emb"), col("c_emb")).as("d2"))
-      .withColumn("rk", row_number().over(wq1))
-      .withColumn("best", min(col("d2")).over(wBest1))
-      .filter(col("rk") <= lit(l1MinProbe) ||
-        (col("rk") <= lit(l1MaxProbe) &&
-          col("d2") <= (lit(1.0) + lit(l1Slack)) * col("best")))
-      .select(col("query_id"), col("q_emb"), col("super_id"))
-    val centsS = cents.join(centToSuper, "cent_id")
-    val wq2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2"), col("cent_id"))
-    val wBest2 = Window.partitionBy(col("query_id"))
-    val picked = centsS.join(broadcast(admitted), "super_id")
-      .select(col("query_id"), col("q_emb"), col("cent_id"),
-        PQ.l2sq(col("q_emb"), col("c_emb")).as("d2"))
-      .withColumn("rk", row_number().over(wq2))
-      .withColumn("best", min(col("d2")).over(wBest2))
-      .filter(col("rk") <= lit(minProbe) ||
-        (col("rk") <= lit(maxProbe) &&
-          col("d2") <= (lit(1.0) + lit(slack)) * col("best")))
-    // probeFrom materializes the derived probe-bucket frame once for
-    // its two consumers — a second checkpoint here would store the
-    // same rows twice
-    probeFrom(spark, path, picked, m, topK, shortlist, allowed)
-  }
+      allowed: Option[DataFrame] = None): DataFrame =
+    adcTopK(spark, path,
+      Ivf.twoLevel(Ivf.L2, cents, superCents, centToSuper, queries,
+        Ivf.Budget(slack, minProbe, maxProbe),
+        Ivf.Budget(l1Slack, l1MinProbe, l1MaxProbe)),
+      m, topK, shortlist, allowed)
 
-  /** Stage 1 scoring shared by both probes: per-query centroid
-    * distances with nearest-first rank (tiny broadcast cross
-    * product, squared L2 — the build-side assignment metric). */
-  private def coarseRanks(cents: DataFrame,
-      queries: DataFrame): DataFrame = {
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2"), col("cent_id"))
-    queries.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("q_emb"), col("cent_id"),
-        PQ.l2sq(col("q_emb"), col("c_emb")).as("d2"))
-      .withColumn("rk", row_number().over(wq))
-  }
-
-  /** Stages 2-3 over an already-picked (query_id, q_emb, cent_id
-    * [, ...]) bucket frame.
+  /** Stages 2-3 over the coarse picks, through the shared probe head
+    * ([[Ivf.head]]).
     *
     * Query-batch bound: the picks are collected and the ADC distance
     * tables are computed on the driver, single-threaded. The tables
@@ -608,90 +528,21 @@ object IvfPq {
     * (about 10 MB raw). Keep queries x m x k below about 10^7 per call
     * (about 80 MB raw; at k = 256 that is about 5,000 queries with
     * m = 8) and split larger batches across calls. */
-  private def probeFrom(spark: SparkSession, path: String,
+  private def adcTopK(spark: SparkSession, path: String,
       picked: DataFrame, m: Int, topK: Int,
       shortlist: Int, allowed: Option[DataFrame]): DataFrame = {
-    // ONE execution of the coarse stage ([[VectorIndex.scanTopK]]'s
-    // rationale): both consumers — the pruning bucket list and the
-    // ADC join, which broadcasts (= collects) the frame anyway —
-    // are served from a single collect, re-shipped as a local
-    // relation; the queries x centroids cross join + windows run once.
-    // LocalRelation (not parallelize) so the downstream broadcast
-    // builds from driver memory without a one-task staging job.
-    val pbFrame = picked
-      .select(col("query_id"), col("q_emb"), col("cent_id").as("bucket"))
-    val pbRows = pbFrame.collect()
-    val probeBuckets = spark.createDataFrame(
-      java.util.Arrays.asList(pbRows: _*), pbFrame.schema)
-    // bucket IN (...) is a partition filter: planning-time pruning —
-    // the probed-bucket id set is bounded by queries x nProbe
-    val buckets = pbRows.map(_.getAs[Int]("bucket")).distinct
-    // the queries relation, re-shipped from the SAME collect: every
-    // query row survives the coarse stage (rank 1 always passes the
-    // probe budget), so the distinct collected pairs ARE the queries
-    // frame — the distance-table staging and the re-rank broadcast
-    // below build from this LocalRelation instead of re-running the
-    // queries subtree as two more sequential broadcast-build jobs
-    // (§2.4). The caller contract — unique query ids, each with a
-    // non-null q_emb — is checked here, on rows already collected
-    // (a duplicated query row surfaces as a repeated (query_id,
-    // bucket) pick): the driver-side distance tables keep one row per
-    // id, where the distributed form would pair every duplicate.
-    val qSchema = org.apache.spark.sql.types.StructType(
-      Seq(pbFrame.schema("query_id"), pbFrame.schema("q_emb")))
-    val qRows = {
-      val seen = scala.collection.mutable.LinkedHashMap
-        .empty[Any, org.apache.spark.sql.Row]
-      val picks = scala.collection.mutable.HashSet.empty[(Any, Int)]
-      pbRows.foreach { r =>
-        val id = r.get(0)
-        require(!r.isNullAt(1), s"IvfPq.probe: query_id $id has a null q_emb")
-        require(picks.add((id, r.getInt(2))) &&
-          seen.get(id).forall(_.get(1) == r.get(1)),
-          s"IvfPq.probe: query_id $id appears in more than one query " +
-            "row — query ids must be unique")
-        seen.getOrElseUpdate(id, org.apache.spark.sql.Row(id, r.get(1)))
-      }
-      seen.values.toSeq
-    }
-    val queriesLocal = spark.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qSchema)
-    // tombstone mask on the pruned scan: deleted keys drop BEFORE the
-    // ADC shortlist (like `allowed`), so top-k never under-fills with
-    // dead rows; with no tombstones this is the bare scan
-    def prunedIndex = dropTombstoned(spark, path,
-      spark.read.parquet(path)
-        .filter(col("bucket").isin(buckets.toSeq: _*)))
+    val h = Ivf.head(spark, path, picked, "IvfPq.probe")
     // stage 2 — ADC shortlist within each query's own probed buckets.
     // Only (bucket, vec_id, codes, gen) are selected, so the parquet
     // scan column-prunes the wide embedding away (ReadSchema) — the
-    // scoring pass reads the codes table, not the corpus.
-    // Distance tables are computed on the driver from the collected
-    // queries and the (m*k)-row codebooks ([[PQ.distanceTableRows]] —
-    // float-identical to the distributed staging) so they too
-    // broadcast from a LocalRelation.
-    val cbDf = spark.read.parquet(codebooksPath(path))
-      .select(col("sub"), col("cid"), col("c_sub"))
-    def isFloatArr(f: org.apache.spark.sql.types.StructField): Boolean =
-      f.dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) => true
-        case _ => false
-      }
-    val dtRows = PQ.distanceTableRows(qRows, cbDf.collect(), m,
-      qFloat = isFloatArr(qSchema("q_emb")),
-      cbFloat = isFloatArr(cbDf.schema("c_sub")))
-    val dtSchema = org.apache.spark.sql.types.StructType(Seq(
-      qSchema("query_id"),
-      org.apache.spark.sql.types.StructField("dts",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
-    val dt = spark.createDataFrame(
-      java.util.Arrays.asList(dtRows: _*), dtSchema)
+    // scoring pass reads the codes table, not the corpus. The tombstone
+    // mask (in h.index) drops deleted keys BEFORE the shortlist, so
+    // top-k never under-fills with dead rows.
+    val dt = PQ.adcTables(h.queries, h.rows,
+      spark.read.parquet(codebooksPath(path)), m)
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc"), col("vec_id"), col("gen"))
-    val candidates = prunedIndex
+    val candidates = h.index
       .select(col("bucket"), col("vec_id"), col("codes"), col("gen"))
     // the filter cuts candidates BEFORE ADC scoring: distance math
     // runs only on eligible rows, and everything downstream
@@ -700,7 +551,7 @@ object IvfPq {
       candidates.join(broadcast(a.select(col("vec_id"))),
         Seq("vec_id"), "left_semi"))
     val shortlisted = eligible
-      .join(broadcast(probeBuckets.select(col("query_id"), col("bucket"))),
+      .join(broadcast(h.picks.select(col("query_id"), col("bucket"))),
         "bucket")
       .join(broadcast(dt), "query_id")
       .select(col("query_id"), col("vec_id"), col("gen"),
@@ -719,10 +570,10 @@ object IvfPq {
       .orderBy(col("dist"), col("vec_id"))
     val wDup = Window.partitionBy(col("query_id"), col("vec_id"))
       .orderBy(col("dist"), col("gen").desc)
-    prunedIndex
+    h.index
       .select(col("vec_id"), col("gen"), col("embedding"))
       .join(broadcast(shortlisted), Seq("vec_id", "gen"))
-      .join(broadcast(queriesLocal), "query_id")
+      .join(broadcast(h.queries), "query_id")
       .select(col("query_id"), col("vec_id"), col("gen"),
         PQ.l2sq(col("embedding"), col("q_emb")).as("dist"))
       .withColumn("dup", row_number().over(wDup))

@@ -1,9 +1,10 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType,
+  FloatType, StructField, StructType}
 
 /** Product quantization: the memory-bound ANN scale path. Vectors are
   * split into `m` subvectors; each subspace gets its own `k`-centroid
@@ -25,26 +26,20 @@ import org.apache.spark.sql.types.DecimalType
   * Scale shape: training/encode assignment is a broadcast of the m*k
   * codebook rows against the exploded (vec_id, sub) frame — one
   * window argmin per pass, no pairwise corpus join anywhere; ADC
-  * staging computes each query's distance table BEFORE the candidate
-  * pass, so the per-candidate cost is m `element_at` lookups.
+  * staging computes each query's distance table on the driver BEFORE
+  * the candidate pass, so the per-candidate cost is m table lookups.
   */
 object PQ {
 
   /** Squared L2 between two float-array columns: the native codegen
     * expression ([[graft.expressions.FloatL2DistSq]]) — one primitive
     * loop, no zipped intermediate array. Bit-identical to the composed
-    * fold it replaced ([[l2sqComposed]]; the per-element arithmetic
-    * stays FLOAT on float inputs, only the accumulation is Double,
-    * exactly like the composed form — VectorFunctionsSpec pins the
-    * bit-equality on both element types). */
+    * `aggregate(zip_with(...))` fold it replaced: the per-element
+    * arithmetic stays FLOAT on float inputs, only the accumulation is
+    * Double (VectorFunctionsSpec pins the bit-equality on both element
+    * types). */
   private[vector] def l2sq(a: Column, b: Column): Column =
     graft.expressions.VectorExpressions.l2sqF(a, b)
-
-  /** The composed-builtins squared L2 (kept as the reference
-    * implementation; [[l2sq]] is the fast path). */
-  private[vector] def l2sqComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
 
   /** (vec_id, sub, sv): each vector exploded into its m subvectors.
     * explode_outer + isNotNull per the engine-wide generate rule
@@ -180,13 +175,18 @@ object PQ {
     * Output: (query_id, rk, vec_id, adc) — `adc` is the approximate
     * distance (useful for re-ranking the short list exactly).
     *
-    * The per-query distance table `dts` (m arrays of k distances) is
-    * staged on the query side BEFORE the candidate pass, so each
-    * (query, candidate) pair costs m element_at lookups — never a
-    * d-wide arithmetic pass. */
+    * The queries are collected once (unique ids with non-null
+    * embeddings, else IllegalArgumentException — the [[Ivf]] query
+    * contract) and their distance tables `dts` (m arrays of k
+    * distances) are computed on the driver ([[adcTables]]) BEFORE the
+    * candidate pass, so each (query, candidate) pair costs m lookups —
+    * never a d-wide arithmetic pass. */
   def search(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
-      m: Int, topK: Int): DataFrame = {
-    val dt = distanceTables(queries, codebooks, m)
+      m: Int, topK: Int): DataFrame =
+    adcRank(codes, staged(queries, codebooks, m)._2, m, topK)
+
+  private def adcRank(codes: DataFrame, dt: DataFrame, m: Int,
+      topK: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc"), col("vec_id"))
     codes.crossJoin(broadcast(dt))
@@ -197,60 +197,51 @@ object PQ {
       .select(col("query_id"), col("rk"), col("vec_id"), col("adc"))
   }
 
-  /** Per-query ADC distance tables: (query_id, dts) where dts is m
-    * arrays of k subspace distances — staged once per query, broadcast
-    * to the candidate pass ([[search]], [[IvfPq.probe]]). */
-  private[vector] def distanceTables(queries: DataFrame,
-      codebooks: DataFrame, m: Int): DataFrame =
-    subvectors(queries.withColumnRenamed("query_id", "vec_id"),
-      "q_emb", m)
-      .withColumnRenamed("vec_id", "query_id")
-      .join(broadcast(codebooks), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("cid"),
-        l2sq(col("sv"), col("c_sub")).as("d"))
-      .groupBy(col("query_id"), col("sub"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("d"))))
-        .as("cd"))
-      .select(col("query_id"), col("sub"),
-        transform(col("cd"), x => x.getField("d")).as("dt"))
-      .groupBy(col("query_id"))
-      .agg(sort_array(collect_list(struct(col("sub"), col("dt"))))
-        .as("sd"))
-      .select(col("query_id"),
-        transform(col("sd"), x => x.getField("dt")).as("dts"))
+  /** One collect of the queries: the (query_id, q_emb) relation and
+    * its distance tables, both local. */
+  private def staged(queries: DataFrame, codebooks: DataFrame,
+      m: Int): (DataFrame, DataFrame) = {
+    val q = queries.select(col("query_id"), col("q_emb"))
+    val rows = Ivf.uniqueQueries(q.collect().toSeq, "PQ.search")(_ => ())
+    val local = Ivf.local(q.sparkSession, rows, q.schema)
+    (local, adcTables(local, rows, codebooks, m))
+  }
 
-  /** [[distanceTables]] computed ON THE DRIVER over already-collected
-    * query rows and codebook rows — what [[IvfPq.probeFrom]] stages
-    * after its coarse-stage collect, so the distance tables broadcast
-    * from a LocalRelation instead of re-running the queries subtree
-    * through two aggregation exchanges as a separate broadcast-build
-    * job (guide §2.4: the frame was bounded and collected anyway).
+  /** The ADC distance tables of collected query rows, computed ON THE
+    * DRIVER against the collected (m*k)-row codebooks: (query_id, dts)
+    * as a local relation, where dts holds, per subspace in ascending
+    * order, the squared L2 of the query's subvector to each codebook
+    * entry in ascending cid order. The one distance-table path of
+    * [[search]], [[searchRerank]] and every [[IvfPq]] probe: the
+    * queries were collected anyway, so the tables broadcast from
+    * driver memory instead of re-running the queries subtree through
+    * two aggregation exchanges.
     *
-    * Bit-identity with the distributed form, piece by piece:
-    * subvector slicing uses the same `ds = dim / m` integral bounds
-    * (a non-divisible tail is dropped by both); each subspace
-    * distance runs the same float-subtract/float-square/Double-
-    * accumulate loop as [[graft.expressions.FloatL2DistSq]] (null
-    * elements 0, shorter-prefix fold); the (cid, d) entries sort by
-    * the same (cid, then d) struct order `sort_array` uses (cids are
-    * unique per sub, so the tie-break never fires); subs sort
-    * ascending exactly like the outer `sort_array`; a sub absent
-    * from the codebooks is absent from `dts` (inner join). The one
-    * caller, [[IvfPq.probeFrom]], requires unique query ids with
-    * non-null q_emb before calling, so neither a null embedding nor
-    * a duplicated query row (which the distributed form would pair
-    * with every codebook row twice) reaches this function. */
-  private[vector] def distanceTableRows(
-      qRows: Seq[org.apache.spark.sql.Row],
-      cbRows: Seq[org.apache.spark.sql.Row], m: Int,
-      qFloat: Boolean, cbFloat: Boolean): Seq[org.apache.spark.sql.Row] = {
+    * Arithmetic: subvector bounds are the integral `ds = dim / m` (a
+    * non-divisible tail is dropped); each subspace distance runs
+    * [[graft.expressions.FloatL2DistSq]]'s loop (float ops on two
+    * float arrays, double otherwise, Double accumulation left to right,
+    * null element 0, fold over the shorter prefix); a sub absent from
+    * the codebooks is absent from `dts`. PQSpec pins the values
+    * bit-equal to the composed `zip_with` / `element_at` form. `rows`
+    * must hold unique ids with non-null embeddings
+    * ([[Ivf.uniqueQueries]]). */
+  private[vector] def adcTables(queries: DataFrame, rows: Seq[Row],
+      codebooks: DataFrame, m: Int): DataFrame = {
+    val cb = codebooks.select(col("sub"), col("cid"), col("c_sub"))
+    def isFloatArr(f: StructField) = f.dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    val qFloat = isFloatArr(queries.schema("q_emb"))
+    val cbFloat = isFloatArr(cb.schema("c_sub"))
     val bySub: Map[Int, Seq[(Int, scala.collection.Seq[Any])]] =
-      cbRows.map(r => (r.getInt(0), (r.getInt(1),
+      cb.collect().toSeq.map(r => (r.getInt(0), (r.getInt(1),
         r.get(2).asInstanceOf[scala.collection.Seq[Any]])))
         .groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
     val subs = bySub.keysIterator.filter(j => j >= 0 && j < m)
       .toSeq.sorted
-    qRows.map { r =>
+    val dtRows = rows.map { r =>
       val e = r.getAs[scala.collection.Seq[Any]](1)
       val ds = e.length / m
       val dts: Seq[Seq[Double]] = subs.map { j =>
@@ -258,11 +249,14 @@ object PQ {
         bySub(j)
           .map { case (cid, cSub) =>
             (cid, l2sqLocal(sv, cSub, qFloat, cbFloat)) }
-          .sortBy(identity)
+          .sortBy(_._1)
           .map(_._2)
       }
-      org.apache.spark.sql.Row(r.get(0), dts)
+      Row(r.get(0), dts)
     }
+    Ivf.local(queries.sparkSession, dtRows, StructType(Seq(
+      queries.schema("query_id"),
+      StructField("dts", ArrayType(ArrayType(DoubleType))))))
   }
 
   /** [[graft.expressions.FloatL2DistSq]]'s exact arithmetic on
@@ -307,19 +301,10 @@ object PQ {
     * composed `aggregate(sequence(...))` form it replaced allocated
     * the index array and three interpreted `element_at`s per
     * CANDIDATE, the ADC stage's per-row hot path). Fold order and
-    * null-on-invalid-subscript semantics are unchanged
-    * ([[adcOfComposed]] kept as the reference; PQSpec pins the
-    * bit-equality). */
+    * null-on-invalid-subscript semantics are those of the composed
+    * `element_at` fold, which PQSpec recomputes and pins bit-equal. */
   private[vector] def adcOf(codes: Column, dts: Column, m: Int): Column =
     graft.expressions.VectorExpressions.adcF(codes, dts, m)
-
-  /** The composed-builtins ADC fold (reference implementation;
-    * [[adcOf]] is the fast path). */
-  private[vector] def adcOfComposed(codes: Column, dts: Column,
-      m: Int): Column =
-    aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
-      acc + element_at(element_at(dts, j.cast("int") + 1),
-        element_at(codes, j.cast("int") + 1) + 1))
 
   /** The standard PQ serving pipeline: ADC over the compressed corpus
     * builds a `shortlist`-sized candidate set per query, then ONLY
@@ -332,13 +317,15 @@ object PQ {
   def searchRerank(codes: DataFrame, codebooks: DataFrame,
       queries: DataFrame, corpus: DataFrame, m: Int, shortlist: Int,
       topK: Int): DataFrame = {
-    val cand = search(codes, codebooks, queries, m, shortlist)
+    // one collect feeds both the distance tables and the re-rank
+    val (q, dt) = staged(queries, codebooks, m)
+    val cand = adcRank(codes, dt, m, shortlist)
       .select(col("query_id"), col("vec_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("dist"), col("vec_id"))
     cand
       .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(queries), "query_id")
+      .join(broadcast(q), "query_id")
       .select(col("query_id"), col("vec_id"),
         l2sq(col("embedding"), col("q_emb")).as("dist"))
       .withColumn("rk", row_number().over(w))

@@ -213,21 +213,21 @@ object VectorIndex {
     cents
   }
 
-  /** Assign each corpus vector to its nearest centroid (cosine) and
-    * write the index partitioned by bucket. */
+  /** Assign each corpus vector to its nearest centroid (cosine), write
+    * the index partitioned by bucket and persist `cents` beside it
+    * ([[centroidsOf]]), so a probe-only consumer needs no rebuild of
+    * the k-means. A rebuild supersedes every prior delete: stale
+    * tombstones would wrongly mask freshly built rows. */
   def build(corpus: DataFrame, cents: DataFrame, path: String): Unit = {
     assignBuckets(corpus, cents)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    // a rebuild supersedes every prior delete — stale tombstones
-    // would wrongly mask freshly built rows
-    val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(tombstonesPath(path))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    ()
+    Ivf.clearTombstones(corpus.sparkSession, path)
+    cents.write.mode("overwrite").parquet(Ivf.centroidsPath(path))
   }
 
-  private def tombstonesPath(indexPath: String) =
-    s"$indexPath.tombstones"
+  /** The persisted centroids of an index built at `path`. */
+  def centroidsOf(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(Ivf.centroidsPath(path))
 
   /** DELETE `keys` ((vec_id) frame) from the persisted cosine index:
     * one tombstone write, zero index files touched — deleted keys
@@ -238,61 +238,16 @@ object VectorIndex {
     * a deleted key means rebuilding. Idempotent. */
   def delete(spark: SparkSession, indexPath: String,
       keys: DataFrame): Unit =
-    keys.select(col("vec_id")).filter(col("vec_id").isNotNull)
-      .distinct()
-      .repartition(1)
-      .write.mode("append").parquet(tombstonesPath(indexPath))
+    Ivf.tombstone(indexPath, keys, cut = None)
 
-  private def tombstonesOf(spark: SparkSession,
-      indexPath: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(tombstonesPath(indexPath))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** Per-query centroid scores: (query_id, q_emb, q_nrm, cent_id,
-    * csim, rk) — rk ranks centroids nearest-first per query. Tiny
-    * (queries x centroids), one broadcast cross product. */
-  private def centroidRanks(cents: DataFrame,
-      queries: DataFrame): DataFrame = {
-    val q = queries.withColumn("q_nrm", l2Norm(col("q_emb")))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cent_id"))
-    q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cent_id"),
-        when(col("q_nrm") === 0.0 || col("c_nrm") === 0.0, lit(-2.0))
-          .otherwise(dotF(col("c_emb"), col("q_emb"))
-            / (col("c_nrm") * col("q_nrm"))).as("csim"))
-      .withColumn("rk", row_number().over(wq))
-  }
-
-  /** The shared probe tail: scan ONLY the probed buckets (the bucket
-    * IN (...) filter is a partition filter -> planning-time pruning
-    * of the index dirs) and take per-query cosine top-k. */
-  private def scanTopK(spark: SparkSession, indexPath: String,
-      probeBuckets: DataFrame, k: Int): DataFrame = {
-    // ONE execution of the coarse stage: the frame has two consumers
-    // (the bucket list for planning-time partition pruning, and the
-    // scan join — which BROADCASTS it, i.e. collects it to the driver
-    // anyway), so collect it once and re-ship the rows as a local
-    // relation. Same driver data movement the broadcast already paid;
-    // one fewer job than the previous checkpoint-then-collect, and
-    // the coarse cross join + windows run exactly once.
-    val pbRows = probeBuckets.collect()
-    val pb = spark.createDataFrame(
-      spark.sparkContext.parallelize(pbRows.toSeq, 1),
-      probeBuckets.schema)
-    val buckets = pbRows.map(_.getAs[Int]("bucket")).distinct
-    val scanned = spark.read.parquet(indexPath)
-      .filter(col("bucket").isin(buckets.toSeq: _*))
-    // tombstone mask: deleted keys drop before scoring (broadcast
-    // anti-join, bounded by deletes); no tombstones = the bare scan
-    val index = tombstonesOf(spark, indexPath).fold(scanned)(t =>
-      scanned.join(broadcast(t.select(col("vec_id"))),
-        Seq("vec_id"), "left_anti"))
+  /** The cosine tail over the shared probe head: per-query top-k by
+    * cosine over the probed buckets' rows. */
+  private def topK(spark: SparkSession, indexPath: String,
+      picked: DataFrame, k: Int): DataFrame = {
+    val h = Ivf.head(spark, indexPath, picked, "VectorIndex.probe")
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    index.join(broadcast(pb), "bucket")
+    h.index.join(broadcast(h.picks), "bucket")
       .select(col("query_id"), col("vec_id"),
         when(col("nrm") === 0.0 || col("q_nrm") === 0.0,
           lit(null).cast("double"))
@@ -304,15 +259,12 @@ object VectorIndex {
   }
 
   /** Probe: top-k cosine neighbors for each query, scanning only each
-    * query's nProbe nearest buckets. Queries: (query_id, q_emb). */
+    * query's nProbe nearest buckets. Queries: (query_id, q_emb) under
+    * the [[Ivf]] query contract. Output: (query_id, rk, vec_id, sim). */
   def probe(spark: SparkSession, indexPath: String, cents: DataFrame,
       queries: DataFrame, k: Int, nProbe: Int): DataFrame =
-    scanTopK(spark, indexPath,
-      centroidRanks(cents, queries)
-        .filter(col("rk") <= nProbe)
-        .select(col("query_id"), col("q_emb"), col("q_nrm"),
-          col("cent_id").as("bucket")),
-      k)
+    probeAdaptive(spark, indexPath, cents, queries, k,
+      minProbe = nProbe, maxProbe = nProbe)
 
   /** Level-1 quantizer over a CENTROID SET — the two-level coarse
     * stage's build half ([[probeAdaptive2]]): cluster the centroids
@@ -332,58 +284,6 @@ object VectorIndex {
       .select(col("vec_id").cast("int").as("cent_id"),
         col("bucket").as("super_id"))
     (sc, mapping)
-  }
-
-  /** Bucket-assign and WRITE the index through the two-level
-    * quantizer — [[probeAdaptive2]]'s build-side companion: at 10⁴+
-    * cells the flat corpus × centroids assignment product hits the
-    * same wall as the probe's coarse stage (measured: 200k × 10k
-    * pairs OOMs a 32-thread local box inside [[assignBuckets]]'s
-    * per-vector window). Each vector scores the SUPER-centroids
-    * (corpus × S broadcast, S ~ sqrt(C)), keeps its `l1Probe`
-    * nearest super-cells, and scores only their centroids (a
-    * broadcast join by super id) — per-vector work ~ l1Probe × C/S
-    * instead of C. Assignment is hierarchically approximate (the
-    * true nearest centroid can sit in an unprobed super-cell);
-    * probes traverse the SAME level-1, so the approximation is
-    * measured end-to-end by the recall pins (ann2l100). */
-  def buildHier(corpus: DataFrame, cents: DataFrame,
-      superCents: DataFrame, centToSuper: DataFrame, path: String,
-      l1Probe: Int = 4): Unit = {
-    val q = corpus.withColumn("nrm", l2Norm(col("embedding")))
-    val w1 = Window.partitionBy(col("vec_id"))
-      .orderBy(col("csim").desc, col("super_id"))
-    val sup = q.crossJoin(broadcast(superCents))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cent_id").as("super_id"),
-        when(col("nrm") === 0.0 || col("c_nrm") === 0.0, lit(-2.0))
-          .otherwise(dotF(col("c_emb"), col("embedding"))
-            / (col("c_nrm") * col("nrm"))).as("csim"))
-      .withColumn("rk", row_number().over(w1))
-      .filter(col("rk") <= l1Probe)
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("super_id"))
-    val centsS = cents.join(centToSuper, "cent_id")
-    // aggregated argmax — same shape and equivalence argument as
-    // [[assignBuckets]] (§2.3: one row per vector through the
-    // exchange instead of one per admitted centroid)
-    sup.join(broadcast(centsS), "super_id")
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cent_id"),
-        when(col("nrm") === 0.0 || col("c_nrm") === 0.0, lit(-2.0))
-          .otherwise(dotF(col("c_emb"), col("embedding"))
-            / (col("c_nrm") * col("nrm"))).as("csim"))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("csim"), (-col("cent_id")).as("nc"),
-        col("cent_id").as("cent_id"), col("embedding").as("embedding"),
-        col("nrm").as("nrm"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.nrm").as("nrm"), col("best.cent_id").as("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(tombstonesPath(path))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    ()
   }
 
   /** TWO-LEVEL [[probeAdaptive]] — for indexes whose CENTROID SET is
@@ -413,40 +313,11 @@ object VectorIndex {
       slack: Double = 0.5, minProbe: Int = 2,
       maxProbe: Int = Int.MaxValue,
       l1Slack: Double = 1.0, l1MinProbe: Int = 2,
-      l1MaxProbe: Int = Int.MaxValue): DataFrame = {
-    val wBest1 = Window.partitionBy(col("query_id"))
-    val admitted = centroidRanks(superCents, queries)
-      .withColumn("best", max(col("csim")).over(wBest1))
-      .filter(col("rk") <= lit(l1MinProbe) ||
-        (col("rk") <= lit(l1MaxProbe) &&
-          col("csim") >= col("best") -
-            lit(l1Slack) * (lit(1.0) - col("best"))))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("cent_id").as("super_id"))
-    // level 2: score ONLY the admitted super-cells' centroids — the
-    // admissions frame (queries x admitted supers) broadcasts, the
-    // centroid table stays distributed and joins by super id
-    val centsS = cents.join(centToSuper, "cent_id")
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cent_id"))
-    val wBest2 = Window.partitionBy(col("query_id"))
-    val picked = centsS.join(broadcast(admitted), "super_id")
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("cent_id"),
-        when(col("q_nrm") === 0.0 || col("c_nrm") === 0.0, lit(-2.0))
-          .otherwise(dotF(col("c_emb"), col("q_emb"))
-            / (col("c_nrm") * col("q_nrm"))).as("csim"))
-      .withColumn("rk", row_number().over(w2))
-      .withColumn("best", max(col("csim")).over(wBest2))
-      .filter(col("rk") <= lit(minProbe) ||
-        (col("rk") <= lit(maxProbe) &&
-          col("csim") >= col("best") -
-            lit(slack) * (lit(1.0) - col("best"))))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("cent_id").as("bucket"))
-    // scanTopK materializes the frame once for its two consumers
-    scanTopK(spark, indexPath, picked, k)
-  }
+      l1MaxProbe: Int = Int.MaxValue): DataFrame =
+    topK(spark, indexPath,
+      Ivf.twoLevel(Ivf.Cosine, cents, superCents, centToSuper, queries,
+        Ivf.Budget(slack, minProbe, maxProbe),
+        Ivf.Budget(l1Slack, l1MinProbe, l1MaxProbe)), k)
 
   /** MULTI-PROBE with a per-query budget derived from the centroid
     * distances themselves — the serving-grade default: a query deep
@@ -467,15 +338,7 @@ object VectorIndex {
   def probeAdaptive(spark: SparkSession, indexPath: String,
       cents: DataFrame, queries: DataFrame, k: Int,
       slack: Double = 0.5, minProbe: Int = 2,
-      maxProbe: Int = Int.MaxValue): DataFrame = {
-    val wBest = Window.partitionBy(col("query_id"))
-    val probeBuckets = centroidRanks(cents, queries)
-      .withColumn("best", max(col("csim")).over(wBest))
-      .filter(col("rk") <= lit(minProbe) ||
-        (col("rk") <= lit(maxProbe) &&
-          col("csim") >= col("best") - lit(slack) * (lit(1.0) - col("best"))))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("cent_id").as("bucket"))
-    scanTopK(spark, indexPath, probeBuckets, k)
-  }
+      maxProbe: Int = Int.MaxValue): DataFrame =
+    topK(spark, indexPath, Ivf.coarse(Ivf.Cosine, cents, queries,
+      Ivf.Budget(slack, minProbe, maxProbe)), k)
 }

@@ -255,6 +255,46 @@ class ManifestBranchSpec extends AnyFunSuite {
       Seq("a", "b"))
   }
 
+  test("mergeToBranch plans without an unsupported broadcast hint") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val t = tmp("graft-brhint")
+    ManifestTable.append(spark, Seq((1L, "ok")).toDF("id", "st"), t,
+      statsCols = Seq("id"))
+    ManifestTable.createBranch(spark, t, "fix")
+    ManifestTable.appendToBranch(spark, Seq((10L, "ok")).toDF("id", "st"),
+      t, "fix", statsCols = Seq("id"))
+    // Spark reports a hint it drops through this logger, at WARN
+    val hintLogger = "org.apache.spark.sql.catalyst.analysis.HintErrorLogger"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val probe = new AbstractAppender("graft-hint-probe", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == hintLogger)
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    probe.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration.getLoggerConfig(hintLogger)
+    cfg.addAppender(probe, null, null)
+    ctx.updateLoggers()
+    try {
+      val (touched, appended) = ManifestTable.mergeToBranch(spark,
+        Seq((10L, "ok2"), (20L, "new")).toDF("id", "st"), t, "fix", "id")
+      assert(touched >= 1 && appended == 1L)
+      assert(ids(ManifestTable.readBranch(spark, t, "fix")) ==
+        Seq(1L, 10L, 20L))
+      import scala.jdk.CollectionConverters._
+      assert(seen.isEmpty, seen.asScala.mkString("\n"))
+    } finally {
+      cfg.removeAppender(probe.getName)
+      ctx.updateLoggers()
+      probe.stop()
+    }
+  }
+
   test("branch-scoped DML: mid-branch DELETE/UPDATE/MERGE fix the " +
       "staged batch; main and base stay physically untouched") {
     val t = tmp("graft-brdml")

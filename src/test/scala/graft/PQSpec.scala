@@ -73,6 +73,60 @@ class PQSpec extends AnyFunSuite {
     assert(r >= 0.8, s"re-ranked recall@10 = $r")
   }
 
+  test("search's ADC distances are bit-equal to the composed-builtins " +
+    "recomputation") {
+    // the distance tables recomputed distributed from composed
+    // builtins: per-subspace zip_with squared L2 against the
+    // codebooks, assembled in (sub, cid) order
+    val subs = spark.range(M).select(col("id").cast("int").as("sub"))
+    val ds = (size(col("q_emb")) / lit(M)).cast("int")
+    val dts = queries.crossJoin(subs)
+      .select(col("query_id"), col("sub"),
+        slice(col("q_emb"), col("sub") * ds + 1, ds).as("sv"))
+      .join(cb, "sub")
+      .select(col("query_id"), col("sub"), col("cid"),
+        l2sq(col("sv"), col("c_sub")).as("d"))
+      .groupBy("query_id", "sub")
+      .agg(sort_array(collect_list(struct(col("cid"), col("d")))).as("cd"))
+      .select(col("query_id"), struct(col("sub"),
+        transform(col("cd"), x => x.getField("d")).as("dt")).as("sdt"))
+      .groupBy("query_id")
+      .agg(sort_array(collect_list(col("sdt"))).as("sd"))
+      .select(col("query_id"),
+        transform(col("sd"), x => x.getField("dt")).as("dts"))
+    // ...and the element_at fold over each returned row's codes
+    val rows = PQ.search(codes, cb, queries, M, 10)
+      .join(codes, "vec_id").join(dts, "query_id")
+      .select(col("adc"),
+        aggregate(sequence(lit(0), lit(M - 1)), lit(0.0), (acc, j) =>
+          acc + element_at(element_at(col("dts"), j + 1),
+            element_at(col("codes"), j + 1) + 1)).as("re"))
+      .collect()
+    assert(rows.length.toLong == queries.count() * 10)
+    val bits = java.lang.Double.doubleToLongBits _
+    assert(rows.forall(r => bits(r.getDouble(0)) == bits(r.getDouble(1))),
+      "driver-side distance tables must score exactly like the composed form")
+  }
+
+  test("search and searchRerank reject a duplicated query id and a " +
+    "null query embedding") {
+    val qs = queries.limit(3).collect().toSeq
+    def frame(rows: Seq[org.apache.spark.sql.Row]) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        queries.schema)
+    val runs: Seq[org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame] = Seq(
+      q => PQ.search(codes, cb, q, M, 10),
+      q => PQ.searchRerank(codes, cb, q, corpus, M, 100, 10))
+    val dupId = org.apache.spark.sql.Row(qs(0).get(0), qs(1).get(1))
+    val nullEmb = org.apache.spark.sql.Row(-1L, null)
+    for (run <- runs) {
+      assert(run(frame(qs)).count() == 30L) // the well-formed batch
+      for (bad <- Seq(dupId, qs(0), nullEmb))
+        intercept[IllegalArgumentException](run(frame(qs :+ bad)).collect())
+    }
+  }
+
   test("ensureCodebooks: cached read ≡ fresh training; versioned reuse") {
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-pq-ensure").toString

@@ -14,6 +14,7 @@ import java.nio.file.{Files, Path}
   * equal a fresh build of the rewritten data. */
 class StaleArtifactSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  private val data = "/root/testdata/sf0.001"
 
   private def copyTree(from: Path, to: Path): Unit =
     if (Files.isDirectory(from)) {
@@ -63,7 +64,7 @@ class StaleArtifactSpec extends AnyFunSuite {
 
   test("q170 index: a same-count rewrite of the embeddings rebuilds, " +
     "equal to a fresh build") {
-    val d = copyOf("/root/testdata/sf0.001")
+    val d = copyOf(data)
     val (cents0, built0) = VectorQueries.ensureQ170Index(spark, d)
     assert(built0)
     val before = q170Probe(d, cents0)
@@ -85,7 +86,7 @@ class StaleArtifactSpec extends AnyFunSuite {
     "rebuilds, equal to a fresh build") {
     def content(p: String) = spark.read.parquet(p)
       .orderBy("term", "doc_id").collect().toSeq
-    val d = copyOf("/root/testdata/sf0.001")
+    val d = copyOf(data)
     val before = content(LayoutQueries.ensurePostings(spark, d))
     rotate(d, "documents", "doc_id", "text")
     val after = content(LayoutQueries.ensurePostings(spark, d))
@@ -94,5 +95,22 @@ class StaleArtifactSpec extends AnyFunSuite {
     assert(same, "a rewritten table must rebuild the fixture")
     val changed = after != before
     assert(changed, "the rotation must change the postings")
+  }
+
+  test("bucketed pair: a same-count rewrite of orders within one " +
+    "session rebuilds, equal to the rewritten table") {
+    def content(t: String) =
+      spark.table(t).orderBy("o_orderkey").collect().toSeq
+    val d = copyOf(data)
+    val (orders0, _) = LayoutQueries.ensureBucketedPair(spark, d)
+    val before = content(orders0)
+    rotate(d, "orders", "o_orderkey", "o_custkey")
+    val (orders1, _) = LayoutQueries.ensureBucketedPair(spark, d)
+    val after = content(orders1)
+    val same = after ==
+      Tables.orders(spark, d).orderBy("o_orderkey").collect().toSeq
+    assert(same, "a rewritten table must rebuild the bucketed pair")
+    val changed = after != before
+    assert(changed, "the rotation must change the orders")
   }
 }

@@ -286,4 +286,39 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(back.length == 1 && back.head.getLong(2) == deadIds.min,
       "rebuild must clear stale tombstones")
   }
+
+  test("every probe rejects a duplicated query id and a null query " +
+    "embedding") {
+    val tmp = Files.createTempDirectory("graft-ivf-contract").toString
+    val path = s"$tmp/index"
+    val cents = VectorIndex.centroids(corpus, 4).localCheckpoint()
+    VectorIndex.build(corpus, cents, path)
+    val (sc, centToSuper) = VectorIndex.superCentroids(cents, 2)
+    val queries = corpus.filter(col("vec_id") % 25 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val qs = queries.limit(3).collect().toSeq
+    // budgets above the cell counts keep every coarse pick, so each
+    // offending row reaches the probe head
+    val probes: Seq[org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame] = Seq(
+      q => VectorIndex.probe(spark, path, cents, q, k = 5, nProbe = 8),
+      q => VectorIndex.probeAdaptive(spark, path, cents, q, k = 5,
+        minProbe = 8),
+      q => VectorIndex.probeAdaptive2(spark, path, cents, sc,
+        centToSuper, q, k = 5, minProbe = 8, l1MinProbe = 8))
+    def frame(rows: Seq[org.apache.spark.sql.Row]) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        queries.schema)
+    val dupId = org.apache.spark.sql.Row(qs(0).get(0), qs(1).get(1))
+    val nullEmb = org.apache.spark.sql.Row(-1L, null)
+    for (probe <- probes) {
+      assert(probe(frame(qs)).collect().length == 15) // well-formed
+      // the same id with a second embedding, the same row twice (once
+      // served each neighbour twice), a null embedding (once served
+      // k rows with a null sim)
+      for (bad <- Seq(dupId, qs(0), nullEmb))
+        intercept[IllegalArgumentException](
+          probe(frame(qs :+ bad)).collect())
+    }
+  }
 }
